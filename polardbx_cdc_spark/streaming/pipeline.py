@@ -260,8 +260,14 @@ class BinlogSink:
         if self.wire_dir is not None:
             from polardbx_cdc_spark.binlog_wire import export_wire_files
 
+            # the file census: offsets are dense and file_seq = offset div
+            # rotate_rows, so _offset alone gives every file's row count —
+            # the export reads only the files it re-renders
             export_wire_files(spark, self.out_dir, self.wire_dir,
-                              incremental=True, **self.wire_flags)
+                              incremental=True,
+                              _census=(self._offset, self.rotate_rows,
+                                       self.frame_txns),
+                              **self.wire_flags)
 
     def recover(self, spark) -> None:
         """seekLastTso: resume offset/tso from what is already durable."""
@@ -269,11 +275,22 @@ class BinlogSink:
             f.endswith(".parquet") or f.startswith("file_seq=") for f in os.listdir(self.out_dir)
         ):
             existing = spark.read.parquet(self.out_dir)
-            aggs = [F.count(F.lit(1)).alias("n"), F.max("tso").alias("mx")]
+            aggs = [F.count(F.lit(1)).alias("n"), F.max("tso").alias("mx"),
+                    F.max("file_seq").alias("mx_seq")]
             if "txn_commit_tso" in existing.columns:
                 aggs.append(F.max("txn_commit_tso").alias("mx_commit"))
             row = existing.agg(*aggs).collect()[0]
-            self._offset = row["n"]
+            n = row["n"]
+            if n and row["mx_seq"] != (n - 1) // self.rotate_rows:
+                # the wire census derives every file's row count from n
+                # alone — refuse a sink it would mis-count
+                raise RuntimeError(
+                    f"{self.out_dir}: {n} rows end in file_seq "
+                    f"{row['mx_seq']}, not {(n - 1) // self.rotate_rows}: "
+                    f"offsets are not dense or the sink was written with "
+                    f"another rotate_rows (now {self.rotate_rows})"
+                )
+            self._offset = n
             self._last_tso = row["mx"] or ""
             if "txn_commit_tso" in existing.columns:
                 self._last_commit_tso = row["mx_commit"] or ""

@@ -568,6 +568,163 @@ def test_continuous_wire_export_and_tso_seek(spark, sf_dir, tmp_path):
     assert W.seek_wire_position(spark, wire, "9" * 48) is None
 
 
+def _wire_files(wire: str) -> dict[str, bytes]:
+    import os
+
+    return {
+        f: open(os.path.join(wire, f), "rb").read()
+        for f in sorted(os.listdir(wire)) if f.startswith("binlog.")
+    }
+
+
+def _split_events_dir(sf_dir: str, dst: str, parts: int) -> str:
+    """A copy of ``events`` split into ``parts`` files in TSO order, so a
+    maxFilesPerTrigger=1 stream delivers one file per micro-batch."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    t = t.sort_by([("ts", "ascending"), ("event_id", "ascending")])
+    os.makedirs(os.path.join(dst, "events.parquet"))
+    step = -(-t.num_rows // parts)
+    for i in range(parts):
+        pq.write_table(t.slice(i * step, step),
+                       os.path.join(dst, "events.parquet", f"part-{i}.parquet"))
+    return dst
+
+
+@pytest.mark.parametrize("framed", [False, True], ids=["plain", "framed_gtid_compressed"])
+def test_sink_wire_output_matches_full_export(spark, sf_dir, tmp_path, framed):
+    """The per-batch render BinlogSink drives from its own file census
+    writes the same bytes as a one-shot full export of the finished
+    sink: a multi-batch stream whose rotate boundaries fall mid-batch,
+    plain, and txn-framed with GTID carriers and payload compression."""
+    from polardbx_cdc_spark.streaming import pipeline, source
+
+    import os
+    import shutil
+
+    tmpdir = str(tmp_path)
+    sf = _split_events_dir(sf_dir, tmpdir + "/sf", 3)
+    flags = {"emit_gtid": True, "compress_txns": True} if framed else {}
+    out, wire = tmpdir + "/binlog", tmpdir + "/wire"
+    try:
+        q, sink = pipeline.run_binlog_pipeline(
+            source.cdc_stream(spark, sf, max_files_per_trigger=1), out,
+            tmpdir + "/ckpt", rotate_rows=150, frame_txns=framed,
+            wire_dir=wire, wire_flags=flags,
+        )
+        q.awaitTermination(300)
+        sink.flush()
+    finally:  # the stream source's symlink staging dir outlives tmp_path
+        shutil.rmtree(os.path.dirname(source._as_stream_dir(sf, "events")),
+                      ignore_errors=True)
+    assert len([p for p in q.recentProgress if p.numInputRows]) == 3
+    assert sink._offset % 150  # the tail file is still open
+
+    W.export_wire_files(spark, out, tmpdir + "/full", **flags)
+    got, want = _wire_files(wire), _wire_files(tmpdir + "/full")
+    assert len(want) > 3 and list(got) == list(want)
+    assert [f for f in want if got[f] != want[f]] == []
+
+
+def test_sink_census_rerenders_tail_after_crash_before_render(spark, sf_dir, tmp_path):
+    """A crash between the parquet append and the wire render: after a
+    restart, recover() + the replayed batch write no rows, yet the
+    census (from the recovered offset) re-renders the grown tail and the
+    new file the manifest is missing."""
+    from polardbx_cdc_spark.model import derive_cdc_stream
+    from polardbx_cdc_spark.streaming import pipeline
+
+    tmpdir = str(tmp_path)
+    out, wire = tmpdir + "/binlog", tmpdir + "/wire"
+    cdc = derive_cdc_stream(spark, sf_dir)
+    first = cdc.orderBy("tso").limit(600)
+    rest = cdc.join(first.select("tso"), "tso", "left_anti")
+
+    sink = pipeline.BinlogSink(out, rotate_rows=250, wire_dir=wire)
+    sink.recover(spark)
+    sink(first, batch_id=0)
+    before = _wire_files(wire)
+
+    def crash(_spark):
+        raise RuntimeError("crash before the wire render")
+
+    sink._export_wire = crash
+    with pytest.raises(RuntimeError, match="crash before"):
+        sink(rest, batch_id=1)
+    assert _wire_files(wire) == before  # parquet grew, wire did not
+
+    restarted = pipeline.BinlogSink(out, rotate_rows=250, wire_dir=wire)
+    restarted.recover(spark)
+    n = spark.read.parquet(out).count()
+    restarted(rest, batch_id=1)  # replay: every row is already durable
+    assert spark.read.parquet(out).count() == n == cdc.count()
+
+    W.export_wire_files(spark, out, tmpdir + "/full")
+    got, want = _wire_files(wire), _wire_files(tmpdir + "/full")
+    assert len(want) == 4 and got == want
+
+
+def test_binlog_sink_recover_refuses_census_mismatch(spark, sf_dir, tmp_path):
+    """recover() fails loudly when the sink's last file_seq disagrees with
+    (rows - 1) div rotate_rows — e.g. a restart with another
+    rotate_rows — instead of handing the wire render a wrong census."""
+    from polardbx_cdc_spark.model import derive_cdc_stream
+    from polardbx_cdc_spark.streaming import pipeline
+
+    out = str(tmp_path / "binlog")
+    sink = pipeline.BinlogSink(out, rotate_rows=250)
+    sink.recover(spark)
+    sink(derive_cdc_stream(spark, sf_dir), batch_id=0)
+
+    with pytest.raises(RuntimeError, match="rotate_rows"):
+        pipeline.BinlogSink(out, rotate_rows=400).recover(spark)
+    same = pipeline.BinlogSink(out, rotate_rows=250)
+    same.recover(spark)
+    assert same._offset == sink._offset
+
+
+def test_steady_state_sink_export_runs_one_render_task(spark, sf_dir, tmp_path):
+    """A steady-state BinlogSink wire export runs no Spark job over the
+    sink (no schema read, no file_seq count, no exchange): exactly one
+    job, the render, in one task."""
+    import uuid
+
+    from polardbx_cdc_spark.model import derive_cdc_stream
+    from polardbx_cdc_spark.streaming import pipeline
+
+    tmpdir = str(tmp_path)
+    cdc = derive_cdc_stream(spark, sf_dir)
+    first = cdc.orderBy("tso").limit(600)
+    rest = cdc.join(first.select("tso"), "tso", "left_anti")
+    sink = pipeline.BinlogSink(tmpdir + "/binlog", rotate_rows=250,
+                               wire_dir=tmpdir + "/wire")
+    sink.recover(spark)
+    sink(first, batch_id=0)
+
+    sc = spark.sparkContext
+    group = f"wire-export-{uuid.uuid4().hex}"
+    export = sink._export_wire
+
+    def traced(s):
+        sc.setJobGroup(group, "steady-state wire export")
+        try:
+            export(s)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    sink._export_wire = traced
+    sink(rest, batch_id=1)  # grows file 2, starts file 3
+
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    assert len(jobs) == 1, f"export ran {len(jobs)} jobs"
+    stages = [st.getStageInfo(s) for s in st.getJobInfo(jobs[0]).stageIds]
+    assert [s.numTasks for s in stages] == [1]
+
+
 def test_xa_prepare_and_sequence_round_trip():
     """The remaining PolarDB-X event family: XA_PREPARE (branch prepare
     with gtrid/bqual xid data) and SEQUENCE (snapshot/commit sequence
@@ -2594,7 +2751,9 @@ def test_export_wire_files_vectorized_byte_identical(spark, tmp_path):
     byte-identical wire files to the row path (forced-fallback A/B, the
     r13 harness pattern) across txn framing, GCN/GTID carriers, trace
     markers, payload compression, FULL row metadata, null values and
-    multi-table interleaves."""
+    multi-table interleaves. File 2 holds multi-row same-table runs of
+    every action (with null pks and values), so a multi-image UPDATE run
+    slices the file-level before/after duplicate buffer."""
     import os
 
     rows = []
@@ -2617,9 +2776,30 @@ def test_export_wire_files_vectorized_byte_identical(spark, tmp_path):
             rows.append((seq, off, "COMMIT", None, None, None, None,
                          txn, tso))
             off += 1
+    # file 2: (action, table, run length) runs — consecutive rows of one
+    # action on one table share ONE rows event in the render
+    run_rows, off, k = [], 0, 0
+    runs = [("UPDATE", "ta", 5), ("DELETE", "ta", 3), ("INSERT", "ta", 4),
+            ("UPDATE", "tb", 2), ("INSERT", "tb", 1), ("UPDATE", "ta", 3),
+            ("DELETE", "tb", 2), ("UPDATE", "tb", 6)]
+    for txn in (30, 31):
+        tso = f"{7000000000000000000 + txn:019d}" + "0" * 29
+        run_rows.append((2, off, "BEGIN", None, None, None, None, txn, tso))
+        off += 1
+        for act, tbl, n in runs:
+            for _ in range(n):
+                k += 1
+                run_rows.append((
+                    2, off, act, "d1", tbl,
+                    None if k % 11 == 0 else f"pk{txn}-{k}",
+                    None if k % 3 == 0 else float(k) * 0.5, txn, tso,
+                ))
+                off += 1
+        run_rows.append((2, off, "COMMIT", None, None, None, None, txn, tso))
+        off += 1
     sink = str(tmp_path / "sink")
     spark.createDataFrame(
-        rows,
+        rows + run_rows,
         "file_seq long, offset long, action string, db string, "
         "tbl string, pk string, value double, txn_id long, "
         "txn_commit_tso string",
@@ -2645,8 +2825,16 @@ def test_export_wire_files_vectorized_byte_identical(spark, tmp_path):
             old = render(str(tmp_path / f"o{vi}"), **kw)
         finally:
             W._encode_write_images = orig
-        assert set(new) == set(old) and len(new) == 2
+        assert set(new) == set(old) and len(new) == 3
         assert all(new[f] == old[f] for f in new), f"variant {kw}"
+        runs_seen = {
+            (e["type"], len(e["rows"]))
+            for e in W.expand_payload_events(
+                W.decode_events(new["binlog.000003"][4:]))
+            if e["type"] in W.ROWS_EVENTS
+        }
+        assert {(W.UPDATE_ROWS_EVENT, 6), (W.DELETE_ROWS_EVENT, 3),
+                (W.WRITE_ROWS_EVENT, 4)} <= runs_seen
 
     # same A/B for the per-stream Binlog-X renderer (rows-only frames)
     xsink = str(tmp_path / "xsink")
