@@ -2504,30 +2504,41 @@ def binlog_to_events(df, payload_col: str = "payload",
     return df.mapInPandas(decode_partition, out_schema)
 
 
-def _read_sink_files(sink_dir: str, seqs: list[int], partitioned: bool,
-                     columns: list[str], row_filter=None):
-    """Yield ``(file_seq, pyarrow.Table)`` for each of ``seqs`` straight
-    from a sink directory, no Spark job: a ``file_seq=k`` partition
-    directory per file (the layout BinlogSink writes), or one
-    ``file_seq`` filter over a flat layout (``file_seq`` a plain column)."""
+def _sink_file_dir(sink_dir: str, key_cols: list[str], key: tuple) -> str:
+    """The partition directory of one sink file: ``file_seq=k`` in
+    BinlogSink's layout, ``stream_id=s/file_seq=k`` in BinlogXSink's."""
     import os
+
+    return os.path.join(sink_dir, *(f"{c}={v}" for c, v in zip(key_cols, key)))
+
+
+def _read_sink_files(sink_dir: str, key_cols: list[str], keys: list[tuple],
+                     partitioned: bool, columns: list[str], row_filter=None):
+    """Yield ``(key, pyarrow.Table)`` for each file key (the values of
+    ``key_cols``: ``(file_seq,)`` or ``(stream_id, file_seq)``) straight
+    from a sink directory, no Spark job: one partition directory per file
+    (the layout the sinks write), or one filter over a flat layout (the
+    key columns are plain columns)."""
+    import functools
 
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
 
     if partitioned:
-        for seq in seqs:
-            yield seq, ds.dataset(
-                os.path.join(sink_dir, f"file_seq={seq}"), format="parquet"
+        for key in keys:
+            yield key, ds.dataset(
+                _sink_file_dir(sink_dir, key_cols, key), format="parquet"
             ).to_table(columns=columns, filter=row_filter)
         return
-    flt = pc.field("file_seq").isin(seqs)
+    flt = pc.field("file_seq").isin(sorted({k[-1] for k in keys}))
     t = ds.dataset(sink_dir, format="parquet", partitioning="hive").to_table(
-        columns=columns + ["file_seq"],
+        columns=columns + key_cols,
         filter=flt if row_filter is None else flt & row_filter,
     )
-    for seq in seqs:
-        yield seq, t.filter(pc.equal(t["file_seq"], seq)).drop_columns(["file_seq"])
+    for key in keys:
+        yield key, t.filter(functools.reduce(pc.and_, (
+            pc.equal(t[c], v) for c, v in zip(key_cols, key)))
+        ).drop_columns(key_cols)
 
 
 def _merge_gno(ivs) -> list[tuple[int, int]]:
@@ -2604,6 +2615,25 @@ def export_wire_files(spark, sink_dir: str, wire_dir: str,
     DataFrame (file_seq, file_name, n_events, n_bytes — the files
     rendered THIS call) is materialized, so re-consuming it never
     re-renders."""
+    return _export_chains(spark, sink_dir, wire_dir, None, "binlog.",
+                          incremental, trace_markers, emit_gtid,
+                          compress_txns, row_metadata_full, _census)
+
+
+def _export_chains(spark, sink_dir: str, wire_dir: str, chain: str | None,
+                   prefix: str, incremental: bool, trace_markers: bool = False,
+                   emit_gtid: bool = False, compress_txns: bool = False,
+                   row_metadata_full: bool = False,
+                   census: tuple[int, int, bool] | None = None):
+    """The wire renderer behind ``export_wire_files`` (``chain=None``: one
+    chain, ``binlog.NNNNNN``) and ``export_wire_files_x``
+    (``chain="stream_id"``: one chain per stream,
+    ``binlog-x-<sid>.NNNNNN``). A sink file is keyed by its ``key_cols``
+    values, ``(file_seq,)`` or ``(stream_id, file_seq)``; its wire name is
+    ``prefix`` formatted with the chain value, then ``file_seq + 1``;
+    ROTATE links files within a chain; manifest keys are the key values
+    joined by ":" ("seq" in ``_manifest.json``, "sid:seq" in
+    ``_manifest_x.json``)."""
     import json
     import os
 
@@ -2611,44 +2641,55 @@ def export_wire_files(spark, sink_dir: str, wire_dir: str,
     import pyarrow.compute as pc
 
     os.makedirs(wire_dir, exist_ok=True)
-    out_schema = "file_seq bigint, file_name string, n_events bigint, n_bytes bigint"
-    if _census is not None:
-        n_rows, rotate, framed = _census
-        counts = {seq: min(rotate, n_rows - seq * rotate)
+    key_cols = ([chain] if chain else []) + ["file_seq"]
+    out_schema = (f"{chain} int, " if chain else "") + (
+        "file_seq bigint, file_name string, n_events bigint, n_bytes bigint")
+    if census is not None:
+        n_rows, rotate, framed = census
+        counts = {(seq,): min(rotate, n_rows - seq * rotate)
                   for seq in range(-(-n_rows // rotate))}
     else:
         df = spark.read.parquet(sink_dir)
         framed = "txn_commit_tso" in df.columns
-        counts = {int(r[0]): r[1] for r in df.groupBy("file_seq").count().collect()}
+        counts = {tuple(int(v) for v in r[:-1]): r[-1]
+                  for r in df.groupBy(*key_cols).count().collect()}
     gtid = emit_gtid and framed
-    manifest_path = os.path.join(wire_dir, "_manifest.json")
-    prev: dict[int, dict] = {}
+    manifest_path = os.path.join(
+        wire_dir, "_manifest_x.json" if chain else "_manifest.json")
+    prev: dict[tuple, dict] = {}
     if incremental:
         try:
             with open(manifest_path) as fh:
-                prev = {int(k): v if isinstance(v, dict) else {"n": v}
+                prev = {tuple(int(x) for x in k.split(":")):
+                        v if isinstance(v, dict) else {"n": v}
                         for k, v in json.load(fh).items()}
         except FileNotFoundError:
             pass
-    max_seq = max(counts, default=-1)
-    old_max = max(prev, default=-1)
+
+    def tails(keys) -> dict[tuple, int]:  # chain → its last file_seq
+        last: dict[tuple, int] = {}
+        for k in keys:
+            last[k[:-1]] = max(last.get(k[:-1], -1), k[-1])
+        return last
+
+    max_seq, old_max = tails(counts), tails(prev)
     changed = sorted(
-        seq for seq, n in counts.items()
-        if prev.get(seq, {}).get("n") != n
-        or (gtid and "gno" not in prev[seq])
+        k for k, n in counts.items()
+        if prev.get(k, {}).get("n") != n
+        or (gtid and "gno" not in prev[k])
         # previous tail gained a successor → re-render for its ROTATE
-        or (seq == old_max and max_seq > old_max)
+        or (k[-1] == old_max.get(k[:-1]) and max_seq[k[:-1]] > k[-1])
     )
     if not changed:
         return spark.createDataFrame([], out_schema)
 
-    partitioned = os.path.isdir(os.path.join(sink_dir, f"file_seq={changed[0]}"))
+    partitioned = os.path.isdir(_sink_file_dir(sink_dir, key_cols, changed[0]))
     if partitioned:
         sizes = [
-            sum(e.stat().st_size for e in os.scandir(
-                os.path.join(sink_dir, f"file_seq={seq}"))
+            sum(e.stat().st_size
+                for e in os.scandir(_sink_file_dir(sink_dir, key_cols, k))
                 if e.name.endswith(".parquet"))
-            for seq in changed
+            for k in changed
         ]
     else:  # every task filters the whole flat sink: split its bytes evenly
         import pyarrow.dataset as ds
@@ -2659,10 +2700,10 @@ def export_wire_files(spark, sink_dir: str, wire_dir: str,
     total = sum(sizes) or 1
     max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     n_tasks = max(1, min(len(changed), -(-int(total) // max_bytes)))
-    groups: list[list[int]] = [[] for _ in range(n_tasks)]
+    groups: list[list[tuple]] = [[] for _ in range(n_tasks)]
     acc = 0.0
-    for seq, size in zip(changed, sizes):
-        groups[min(n_tasks - 1, int(acc * n_tasks // total))].append(seq)
+    for k, size in zip(changed, sizes):
+        groups[min(n_tasks - 1, int(acc * n_tasks // total))].append(k)
         acc += size
     groups = [g for g in groups if g]
 
@@ -2671,23 +2712,24 @@ def export_wire_files(spark, sink_dir: str, wire_dir: str,
     # COM_BINLOG_DUMP_GTID attach resolves its start file against.
     # Settled files' intervals come from the manifest; only the files
     # rendered now are read (their COMMIT txn ids, with pyarrow here).
-    file_gno: dict[int, list[tuple[int, int]]] = {}
-    prev_gno: dict[int, list[tuple[int, int]]] = {}
+    file_gno: dict[tuple, list[tuple[int, int]]] = {}
+    prev_gno: dict[tuple, list[tuple[int, int]]] = {}
     if gtid:
         todo = set(changed)
-        for seq in counts:
-            if seq not in todo:
-                file_gno[seq] = [tuple(iv) for iv in prev[seq]["gno"]]
-        for seq, t in _read_sink_files(sink_dir, changed, partitioned,
-                                       ["txn_id"],
-                                       pc.field("action") == "COMMIT"):
-            file_gno[seq] = _merge_gno(
+        for k in counts:
+            if k not in todo:
+                file_gno[k] = [tuple(iv) for iv in prev[k]["gno"]]
+        for k, t in _read_sink_files(sink_dir, key_cols, changed, partitioned,
+                                     ["txn_id"],
+                                     pc.field("action") == "COMMIT"):
+            file_gno[k] = _merge_gno(
                 (i, i + 1) for i in t["txn_id"].to_pylist())
-        cum: list[tuple[int, int]] = []
-        for seq in range(max_seq + 1):
-            if seq in todo:
-                prev_gno[seq] = cum
-            cum = _merge_gno(cum + file_gno.get(seq, []))
+        cum: dict[tuple, list[tuple[int, int]]] = {}  # per chain
+        for k in sorted(counts):
+            before = cum.get(k[:-1], [])
+            if k in todo:
+                prev_gno[k] = before
+            cum[k[:-1]] = _merge_gno(before + file_gno[k])
 
     _ROW_TYPE = {
         "INSERT": WRITE_ROWS_EVENT,
@@ -2704,12 +2746,12 @@ def export_wire_files(spark, sink_dir: str, wire_dir: str,
     head2 = _lenenc(2) + _bitmap([True, True])
     both2 = _bitmap([True, True])  # UPDATE: after-image columns present
 
-    def render_file(seq: int, pdf):
+    def render_file(key: tuple, pdf):
         import numpy as np
 
         events: list[bytes] = []
         if gtid:
-            ivs = prev_gno[seq]
+            ivs = prev_gno[key]
             events.append(
                 encode_previous_gtids({_ENGINE_SID: ivs} if ivs else {})
             )
@@ -2858,11 +2900,12 @@ def export_wire_files(spark, sink_dir: str, wire_dir: str,
             events.extend(txn_buf)
             txn_buf = None
         flush_run()
-        name = f"binlog.{seq + 1:06d}"
-        nxt = f"binlog.{seq + 2:06d}" if seq < max_seq else None
+        stem, seq = prefix.format(*key[:-1]), key[-1]
+        name = f"{stem}{seq + 1:06d}"
+        nxt = f"{stem}{seq + 2:06d}" if seq < max_seq[key[:-1]] else None
         path = os.path.join(wire_dir, name)
         write_binlog_file(path, events, next_file=nxt)
-        return seq, name, len(pdf), os.path.getsize(path)
+        return (*key, name, len(pdf), os.path.getsize(path))
 
     cols = ["offset", "action", "db", "tbl", "pk", "value"] + (
         ["txn_id", "txn_commit_tso"] if framed else []
@@ -2872,10 +2915,10 @@ def export_wire_files(spark, sink_dir: str, wire_dir: str,
         for b in batches:
             for i in b["id"]:
                 yield pd.DataFrame(
-                    [render_file(seq, t.sort_by("offset").to_pandas())
-                     for seq, t in _read_sink_files(
-                         sink_dir, groups[i], partitioned, cols)],
-                    columns=["file_seq", "file_name", "n_events", "n_bytes"],
+                    [render_file(k, t.sort_by("offset").to_pandas())
+                     for k, t in _read_sink_files(
+                         sink_dir, key_cols, groups[i], partitioned, cols)],
+                    columns=key_cols + ["file_name", "n_events", "n_bytes"],
                 )
 
     # task i renders groups[i]. A SQL job, not an RDD one: RDD tasks get
@@ -2891,11 +2934,13 @@ def export_wire_files(spark, sink_dir: str, wire_dir: str,
     )
     if incremental:
         merged = dict(prev)
-        for seq, _, n, _ in rows:
-            merged[seq] = {"n": n, "gno": file_gno[seq]} if gtid else {"n": n}
+        for r in rows:
+            k, n = tuple(r[:-3]), r[-2]
+            merged[k] = {"n": n, "gno": file_gno[k]} if gtid else {"n": n}
         tmp = manifest_path + ".tmp"
         with open(tmp, "w") as fh:
-            json.dump({str(k): v for k, v in sorted(merged.items())}, fh)
+            json.dump({":".join(map(str, k)): v
+                       for k, v in sorted(merged.items())}, fh)
         os.replace(tmp, manifest_path)
     return spark.createDataFrame(rows, out_schema)
 
@@ -3167,29 +3212,35 @@ def read_wire_binlog(spark, wire_dir: str, glob: str = "binlog.*"):
     within its file: (file_name, pos) is the real binlog consumer's
     replication position, totally ordering the stream across the rotated
     chain (files sort by name) — appliers replay by it."""
-
-    def decode_files(batches):
-        import os
-
-        import pandas as pd
-
-        cols = ["file_name", "pos", "kind", "db", "tbl", "pk",
-                "value", "xid"]
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                c = wire_frame_cols(os.path.basename(path), bytes(content))
-                for k in cols:
-                    out[k].extend(c[k])
-            yield pd.DataFrame(out)
-
     return (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)  # default skips _manifest.json + X chains
         .load(wire_dir)
         .select("path", "content")
-        .mapInPandas(decode_files, WIRE_FRAME_SCHEMA)
+        .mapInPandas(_decode_wire_batches, WIRE_FRAME_SCHEMA)
     )
+
+
+def _decode_wire_batches(batches, tolerate_truncation: bool = False):
+    """The ``mapInPandas`` frame decoder of the batch and the streaming
+    attach (``read_wire_binlog``, ``streaming.source.wire_stream``):
+    ``(path, content)`` wire files in, their ``WIRE_FRAME_SCHEMA`` rows
+    out through ``wire_frame_cols``, one output batch per input batch.
+    ``tolerate_truncation`` stops cleanly at a torn tail (a tailed relay
+    file) instead of raising."""
+    import os
+
+    import pandas as pd
+
+    cols = ["file_name", "pos", "kind", "db", "tbl", "pk", "value", "xid"]
+    for pdf in batches:
+        out: dict[str, list] = {k: [] for k in cols}
+        for path, content in zip(pdf["path"], pdf["content"]):
+            c = wire_frame_cols(os.path.basename(path), bytes(content),
+                                tolerate_truncation=tolerate_truncation)
+            for k in cols:
+                out[k].extend(c[k])
+        yield pd.DataFrame(out)
 
 
 # ---------------------------------------------------------------------------
@@ -5227,190 +5278,22 @@ def apply_json_diffs(doc, diffs: list):
 def export_wire_files_x(spark, sink_dir: str, wire_dir: str,
                         incremental: bool = False):
     """Binlog-X attach surface: render a BinlogXSink directory
-    (partitioned stream_id/file_seq) as per-stream REAL wire file chains
-    ``binlog-x-<stream>.NNNNNN`` — each stream an independent rotated
-    sequence, exactly the multi-stream layout the reference's Binlog-X
-    dumpers serve (stream name convention from the Binlog-X task model;
-    per-stream writer streaming/pipeline.py:BinlogXSink).
+    (partitioned stream_id/file_seq, or flat with both as columns) as
+    per-stream REAL wire file chains ``binlog-x-<stream>.NNNNNN`` — each
+    stream an independent rotated sequence, exactly the multi-stream
+    layout the reference's Binlog-X dumpers serve (stream name
+    convention from the Binlog-X task model; per-stream writer
+    streaming/pipeline.py:BinlogXSink). ROTATE chains link files WITHIN a
+    stream and never across streams.
 
-    ``incremental=True`` mirrors the single-stream mode: an
-    ``_manifest_x.json`` records per-(stream, seq) event counts; only
-    files whose partition grew, appeared, or whose stream-tail just
-    gained a successor re-render — steady state re-renders one tail
-    file PER STREAM per cycle.
-
-    Scale shape: applyInPandas grouped by (stream_id, file_seq), an
-    exchange that AQE may coalesce to fewer tasks than files (unlike
-    ``export_wire_files``, which renders without one); only the
-    one-row-per-file manifest returns. ROTATE chains link files WITHIN a
-    stream and never across streams. EAGER like ``export_wire_files``:
-    files land before this returns; the manifest frame is materialized."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    _ROW_TYPE = {
-        "INSERT": WRITE_ROWS_EVENT,
-        "UPDATE": UPDATE_ROWS_EVENT,
-        "DELETE": DELETE_ROWS_EVENT,
-    }
-    import json
-
-    df = spark.read.parquet(sink_dir)
-    os.makedirs(wire_dir, exist_ok=True)
-    max_seq = {
-        r["stream_id"]: r["mx"]
-        for r in df.groupBy("stream_id").agg(F.max("file_seq").alias("mx")).collect()
-    }
-    manifest_path = os.path.join(wire_dir, "_manifest_x.json")
-    out_schema = (
-        "stream_id int, file_seq bigint, file_name string, "
-        "n_events bigint, n_bytes bigint"
-    )
-    prev: dict[tuple[int, int], int] = {}
-    if incremental:
-        try:
-            with open(manifest_path) as fh:
-                prev = {
-                    (int(k.split(":")[0]), int(k.split(":")[1])): v
-                    for k, v in json.load(fh).items()
-                }
-        except FileNotFoundError:
-            prev = {}
-        counts = {
-            (r["stream_id"], r["file_seq"]): r["n"]
-            for r in df.groupBy("stream_id", "file_seq")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        old_max = {}
-        for (sid, seq) in prev:
-            old_max[sid] = max(old_max.get(sid, -1), seq)
-        changed = {
-            (sid, seq)
-            for (sid, seq), n in counts.items()
-            if prev.get((sid, seq)) != n
-            or (seq == old_max.get(sid, -1) and max_seq[sid] > old_max.get(sid, -1))
-        }
-        if not changed:
-            return spark.createDataFrame([], out_schema)
-        cond = F.concat_ws(":", F.col("stream_id"), F.col("file_seq")).isin(
-            [f"{s}:{q}" for s, q in changed]
-        )
-        df = df.filter(cond)
-
-    def render_file(key, pdf):
-        import numpy as np
-        import pandas as pd
-
-        sid, seq = int(key[0]), int(key[1])
-        pdf = pdf.sort_values("offset")
-        events: list[bytes] = []
-        current_table = None
-        run_type, run_rows = None, []
-
-        # vectorized image pass (r14) — same shape as export_wire_files:
-        # all images up front (independent of db/tbl), run flushes slice
-        # the shared buffer; per-stream frames are rows-only so the whole
-        # frame vectorizes
-        row_mask = pdf["action"].isin(_ROW_TYPE).to_numpy()
-        img_enc = None
-        if row_mask.any():
-            img_enc = _encode_write_images(
-                TableDef.from_mysql_types("x", "x", CDC_TABLE_TYPES),
-                pdf[row_mask], ["pk", "value"], [None, None],
-                [False, False], [False, False], None, np, pd,
-            )
-        img_pos = row_mask.cumsum() - 1
-        run_i0 = run_n = 0
-
-        if img_enc is not None:
-            buf_img, off_img = img_enc
-            post2 = struct.pack("<H", 0) + struct.pack("<H", 2)
-            head2 = _lenenc(2) + _bitmap([True, True])
-
-            def flush_run():
-                nonlocal run_type, run_n
-                if run_n:
-                    tid = zlib.crc32(
-                        ".".join(current_table).encode()) & 0x7FFFFFFF
-                    i0, i1 = run_i0, run_i0 + run_n
-                    seg = buf_img[off_img[i0]:off_img[i1]]
-                    ev_head = struct.pack("<Q", tid)[:6] + post2 + head2
-                    if run_type == UPDATE_ROWS_EVENT:
-                        L = np.diff(off_img[i0:i1 + 1])
-                        src = off_img[i0:i1] - off_img[i0]
-                        base = np.concatenate(([0], np.cumsum(2 * L)))[:-1]
-                        dup = np.empty(2 * seg.size, np.uint8)
-                        idx = np.repeat(base - src, L) + np.arange(seg.size)
-                        dup[idx] = seg
-                        dup[idx + np.repeat(L, L)] = seg
-                        body = (ev_head + _bitmap([True, True])
-                                + dup.tobytes())
-                    else:
-                        body = ev_head + seg.tobytes()
-                    events.append(encode_event(run_type, body))
-                    run_n = 0
-                run_type = None
-        else:
-            def flush_run():
-                nonlocal run_type, run_rows
-                if run_rows:
-                    td = TableDef.from_mysql_types(
-                        *current_table, CDC_TABLE_TYPES)
-                    tid = zlib.crc32(
-                        ".".join(current_table).encode()) & 0x7FFFFFFF
-                    events.append(
-                        encode_rows_event(run_type, tid, td, run_rows))
-                    run_rows = []
-                run_type = None
-
-        for p, r in enumerate(pdf.itertuples(index=False)):
-            tc = _ROW_TYPE[r.action]
-            if current_table != (r.db, r.tbl):
-                flush_run()
-                current_table = (r.db, r.tbl)
-                td = TableDef.from_mysql_types(r.db, r.tbl, CDC_TABLE_TYPES)
-                tid = zlib.crc32(f"{r.db}.{r.tbl}".encode()) & 0x7FFFFFFF
-                events.append(encode_table_map(tid, td))
-            elif tc != run_type:
-                flush_run()
-            if img_enc is not None:
-                if run_n == 0:
-                    run_i0 = img_pos[p]
-                run_type = tc
-                run_n += 1
-            else:
-                vals = [r.pk, None if pd.isna(r.value) else float(r.value)]
-                run_type = tc
-                run_rows.append(
-                    (vals, vals) if tc == UPDATE_ROWS_EVENT else vals)
-        flush_run()
-        name = f"binlog-x-{sid}.{seq + 1:06d}"
-        nxt = f"binlog-x-{sid}.{seq + 2:06d}" if seq < max_seq[sid] else None
-        path = os.path.join(wire_dir, name)
-        write_binlog_file(path, events, next_file=nxt)
-        return pd.DataFrame(
-            [(sid, seq, name, len(pdf), os.path.getsize(path))],
-            columns=["stream_id", "file_seq", "file_name", "n_events", "n_bytes"],
-        )
-
-    result = (
-        df.select("stream_id", "file_seq", "offset", "action", "db", "tbl", "pk", "value")
-        .groupBy("stream_id", "file_seq")
-        .applyInPandas(render_file, out_schema)
-    )
-    if not incremental:
-        # EAGER by contract (same as export_wire_files): render now,
-        # return the materialized one-row-per-file manifest.
-        rows = result.collect()
-        return spark.createDataFrame(rows, out_schema)
-    rows = result.collect()  # bounded: one row per re-rendered file
-    merged = dict(prev)
-    for r in rows:
-        merged[(int(r["stream_id"]), int(r["file_seq"]))] = r["n_events"]
-    tmp = manifest_path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({f"{s}:{q}": v for (s, q), v in merged.items()}, fh)
-    os.replace(tmp, manifest_path)
-    return spark.createDataFrame(rows, out_schema)
+    The renderer, census, task policy and EAGER contract are those of
+    ``export_wire_files``; only the chain key (``stream_id``) and the
+    file names differ, so a stream's file holds the same events as the
+    global file of the same rows. ``incremental=True`` keeps an
+    ``_manifest_x.json`` of per-(stream, seq) event counts and re-renders
+    only files that grew, appeared, or whose stream tail just gained a
+    successor — steady state re-renders one tail file PER STREAM. The
+    returned manifest is (stream_id, file_seq, file_name, n_events,
+    n_bytes) for the files rendered this call."""
+    return _export_chains(spark, sink_dir, wire_dir, "stream_id",
+                          "binlog-x-{}.", incremental)

@@ -22,30 +22,21 @@ from polardbx_cdc_spark.model import derive_cdc_stream
 
 
 def _as_stream_dir(sf_dir: str, name: str) -> str:
-    """Spark's file streaming source only accepts directories and does NOT
-    recurse into subdirectories; the driver testdata is one parquet FILE
-    per table, while engine-written datasets (e.g. the sf1 stress copy)
-    are parquet DIRECTORIES of part files. Stage a flat symlink dir
-    covering both layouts (testdata itself is read-only). Dangling links
-    from a rebuilt target are pruned so re-materialized datasets stream
-    their current files."""
-    d = os.path.join(tempfile.gettempdir(), "cdc_stream_src", sf_dir.strip("/").replace("/", "_"), name)
-    os.makedirs(d, exist_ok=True)
-    for f in os.listdir(d):
-        p = os.path.join(d, f)
-        if os.path.islink(p) and not os.path.exists(p):
-            os.unlink(p)
+    """The directory a file stream of table ``name`` reads. Spark's file
+    streaming source only accepts directories and does NOT recurse into
+    subdirectories. An engine-written dataset (``name.parquet/`` of part
+    files, e.g. the sf1 stress copy) is that directory, read in place.
+    The driver testdata is one parquet FILE per table in a read-only
+    tree: it is staged as a symlink in a directory keyed by its path, so
+    every stream of one table shares one staging dir."""
     target = os.path.join(sf_dir, f"{name}.parquet")
     if os.path.isdir(target):
-        for f in os.listdir(target):
-            if f.endswith(".parquet"):
-                link = os.path.join(d, f)
-                if not os.path.islink(link):
-                    os.symlink(os.path.join(target, f), link)
-    else:
-        link = os.path.join(d, f"{name}.parquet")
-        if not os.path.islink(link):
-            os.symlink(target, link)
+        return target
+    d = os.path.join(tempfile.gettempdir(), "cdc_stream_src", sf_dir.strip("/").replace("/", "_"), name)
+    os.makedirs(d, exist_ok=True)
+    link = os.path.join(d, f"{name}.parquet")
+    if not os.path.islink(link):
+        os.symlink(target, link)
     return d
 
 
@@ -240,9 +231,10 @@ def wire_stream(spark: SparkSession, wire_dir: str,
     relay/standby directory with Structured Streaming: each newly-LANDED
     file streams through the engine decoder as one Arrow batch. The
     streaming twin of `binlog_wire.read_wire_binlog`: BOTH paths decode
-    through `binlog_wire.wire_frame_rows`, so (file_name, pos) positions
-    are identical and an applier can move between them. The reference's
-    BinlogExtractor tails local binlog files the same way
+    through `binlog_wire.wire_frame_cols` (one shared frame decoder;
+    this one stops cleanly at a torn tail), so (file_name, pos)
+    positions are identical and an applier can move between them. The
+    reference's BinlogExtractor tails local binlog files the same way
     (BinlogExtractor.java:161-236).
 
     File-source semantics: a file is consumed ONCE when it first appears
@@ -264,9 +256,25 @@ def wire_stream(spark: SparkSession, wire_dir: str,
     memory, for bigger streams. Micro-batch cadence is the file-landing
     cadence — the `maxFilesPerTrigger` option bounds catch-up bursts.
     """
+    import functools
+
     from polardbx_cdc_spark import binlog_wire as W
 
-    blobs = (
+    return _wire_files_stream(spark, wire_dir, stream).mapInPandas(
+        functools.partial(W._decode_wire_batches, tolerate_truncation=True),
+        W.WIRE_FRAME_SCHEMA,
+    )
+
+
+def _wire_files_stream(spark: SparkSession, wire_dir: str,
+                       stream: str | None) -> DataFrame:
+    """``(path, content)`` of each wire file landing in ``wire_dir``: the
+    global chain ``binlog.*`` by default, or one Binlog-X per-stream
+    chain ``binlog-x-<stream>.*`` (the layout relay_copy(stream=...)
+    replicates). `is not None`, NOT truthiness: integer stream id 0 is a
+    valid Binlog-X stream (`if stream` silently fell back to the global
+    glob and read nothing)."""
+    return (
         spark.readStream.format("binaryFile")
         # streaming file sources require an explicit schema; this is
         # binaryFile's fixed one
@@ -274,37 +282,11 @@ def wire_stream(spark: SparkSession, wire_dir: str,
                 "length long, content binary")
         .option(
             "pathGlobFilter",
-            # global chain by default; a Binlog-X standby tails one
-            # per-stream chain (binlog-x-<stream>.NNNNNN — the layout
-            # relay_copy(stream=...) replicates) per wire_stream
-            # instance. `is not None`, NOT truthiness: integer stream id
-            # 0 is a valid Binlog-X stream (round-9 find — `if stream`
-            # silently fell back to the global glob and read nothing)
             f"binlog-x-{stream}.*" if stream is not None else "binlog.*",
         )
         .load(wire_dir)
         .select("path", "content")
     )
-
-    def decode_files(batches):
-        import os
-
-        import pandas as pd
-
-        cols = ["file_name", "pos", "kind", "db", "tbl", "pk",
-                "value", "xid"]
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                c = W.wire_frame_cols(
-                    os.path.basename(path), bytes(content),
-                    tolerate_truncation=True,
-                )
-                for k in cols:
-                    out[k].extend(c[k])
-            yield pd.DataFrame(out)
-
-    return blobs.mapInPandas(decode_files, W.WIRE_FRAME_SCHEMA)
 
 
 def wire_typed_stream(spark: SparkSession, wire_dir: str, registry,
@@ -331,18 +313,5 @@ def wire_typed_stream(spark: SparkSession, wire_dir: str, registry,
     decode_files, out_schema = _registry_decode_plan(
         registry, db, tbl, include_action, tolerate_truncation=True
     )
-    return (
-        spark.readStream.format("binaryFile")
-        .schema("path string, modificationTime timestamp, "
-                "length long, content binary")
-        # same chain selection as wire_stream: global by default, one
-        # Binlog-X per-stream chain with stream= (id 0 is valid —
-        # `is not None`, never truthiness)
-        .option(
-            "pathGlobFilter",
-            f"binlog-x-{stream}.*" if stream is not None else "binlog.*",
-        )
-        .load(wire_dir)
-        .select("path", "content")
-        .mapInPandas(decode_files, out_schema)
-    )
+    return _wire_files_stream(spark, wire_dir, stream).mapInPandas(
+        decode_files, out_schema)

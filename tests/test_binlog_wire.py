@@ -602,24 +602,17 @@ def test_sink_wire_output_matches_full_export(spark, sf_dir, tmp_path, framed):
     plain, and txn-framed with GTID carriers and payload compression."""
     from polardbx_cdc_spark.streaming import pipeline, source
 
-    import os
-    import shutil
-
     tmpdir = str(tmp_path)
     sf = _split_events_dir(sf_dir, tmpdir + "/sf", 3)
     flags = {"emit_gtid": True, "compress_txns": True} if framed else {}
     out, wire = tmpdir + "/binlog", tmpdir + "/wire"
-    try:
-        q, sink = pipeline.run_binlog_pipeline(
-            source.cdc_stream(spark, sf, max_files_per_trigger=1), out,
-            tmpdir + "/ckpt", rotate_rows=150, frame_txns=framed,
-            wire_dir=wire, wire_flags=flags,
-        )
-        q.awaitTermination(300)
-        sink.flush()
-    finally:  # the stream source's symlink staging dir outlives tmp_path
-        shutil.rmtree(os.path.dirname(source._as_stream_dir(sf, "events")),
-                      ignore_errors=True)
+    q, sink = pipeline.run_binlog_pipeline(
+        source.cdc_stream(spark, sf, max_files_per_trigger=1), out,
+        tmpdir + "/ckpt", rotate_rows=150, frame_txns=framed,
+        wire_dir=wire, wire_flags=flags,
+    )
+    q.awaitTermination(300)
+    sink.flush()
     assert len([p for p in q.recentProgress if p.numInputRows]) == 3
     assert sink._offset % 150  # the tail file is still open
 
@@ -1060,6 +1053,134 @@ def test_export_wire_files_x_incremental(spark, sf_dir, tmp_path):
     assert (0, tail_seq + 1) in rendered        # the new tail
     assert (0, tail_seq) in rendered            # predecessor gains ROTATE
     assert all(sid == 0 for sid, _ in rendered)  # other streams untouched
+
+
+_X_SINK_SCHEMA = (
+    "stream_id int, file_seq bigint, offset bigint, action string, "
+    "db string, tbl string, pk string, value double"
+)
+
+
+def _run_rows(n_files: int) -> list[tuple]:
+    """Rows-only sink rows ``(file_seq, offset, action, db, tbl, pk,
+    value)``: multi-row same-table UPDATE/DELETE/INSERT runs, a table
+    switch, null pks and null values in every file."""
+    runs = [("UPDATE", "ta", 5), ("DELETE", "ta", 3), ("INSERT", "ta", 4),
+            ("UPDATE", "tb", 2), ("INSERT", "tb", 1), ("DELETE", "tb", 2)]
+    rows, k = [], 0
+    for seq in range(n_files):
+        off = 0
+        for act, tbl, n in runs:
+            for _ in range(n):
+                k += 1
+                rows.append((seq, off, act, "d1", tbl,
+                             None if k % 7 == 0 else f"pk{k}",
+                             None if k % 3 == 0 else k * 0.5))
+                off += 1
+    return rows
+
+
+def _strip_rotate(buf: bytes) -> bytes:
+    """A wire file without its trailing ROTATE event (if any)."""
+    pos, last = 4, 4
+    while pos < len(buf):
+        last = pos
+        pos += int.from_bytes(buf[pos + 9:pos + 13], "little")
+    return buf[:last] if buf[last + 4] == W.ROTATE_EVENT else buf
+
+
+def test_export_wire_files_x_chain_equals_global_chain(spark, tmp_path):
+    """One renderer serves both chains: with the same rows in streams 0
+    and 1, every ``binlog-x-<s>.N`` equals ``binlog.N`` byte for byte up
+    to the trailing ROTATE, and each ROTATE names its own chain's
+    successor."""
+    import os
+
+    rows = _run_rows(3)
+    flat, xsink = str(tmp_path / "flat"), str(tmp_path / "xsink")
+    spark.createDataFrame(
+        rows, "file_seq bigint, offset bigint, action string, db string, "
+        "tbl string, pk string, value double").write.parquet(flat)
+    spark.createDataFrame([(s, *r) for s in (0, 1) for r in rows],
+                          _X_SINK_SCHEMA).write.parquet(xsink)
+    gw, xw = str(tmp_path / "gw"), str(tmp_path / "xw")
+    W.export_wire_files(spark, flat, gw)
+    W.export_wire_files_x(spark, xsink, xw)
+
+    assert len(os.listdir(xw)) == 2 * len(os.listdir(gw)) == 6
+    for seq in range(3):
+        want = open(os.path.join(gw, f"binlog.{seq + 1:06d}"), "rb").read()
+        for s in (0, 1):
+            name = f"binlog-x-{s}.{seq + 1:06d}"
+            got = open(os.path.join(xw, name), "rb").read()
+            assert _strip_rotate(got) == _strip_rotate(want), name
+            nxt = [e["next_file"] for e in W.read_binlog_file(
+                os.path.join(xw, name)) if e["type"] == W.ROTATE_EVENT]
+            assert nxt == ([f"binlog-x-{s}.{seq + 2:06d}"] if seq < 2 else [])
+
+
+def test_export_wire_files_x_reads_int_count_manifest(spark, tmp_path):
+    """An ``_manifest_x.json`` with bare event counts per "sid:seq" (the
+    format before entries became ``{"n": ...}``) still drives the
+    incremental export: over an unchanged sink it renders nothing."""
+    import json
+    import os
+
+    rows = [(s, *r) for s in (0, 1) for r in _run_rows(2)]
+    out, wire = str(tmp_path / "xsink"), str(tmp_path / "wire")
+    spark.createDataFrame(rows, _X_SINK_SCHEMA).write.partitionBy(
+        "stream_id", "file_seq").parquet(out)
+    W.export_wire_files_x(spark, out, wire)
+    counts: dict[str, int] = {}
+    for r in rows:
+        key = f"{r[0]}:{r[1]}"
+        counts[key] = counts.get(key, 0) + 1
+    with open(os.path.join(wire, "_manifest_x.json"), "w") as fh:
+        json.dump(counts, fh)
+    before = {f: os.path.getmtime(os.path.join(wire, f))
+              for f in os.listdir(wire)}
+
+    assert W.export_wire_files_x(spark, out, wire, incremental=True).count() == 0
+    assert {f: os.path.getmtime(os.path.join(wire, f))
+            for f in os.listdir(wire)} == before
+
+
+def test_incremental_x_export_runs_census_and_one_render_task(spark, tmp_path):
+    """An incremental Binlog-X export over a 2-stream sink runs the one
+    census aggregate and one render job of a single one-task stage: no
+    separate max(file_seq) job and no render exchange. Adaptive
+    execution runs a shuffled aggregate as two jobs (map, then result)
+    after the parquet schema read, so the census is three jobs and the
+    only job with more than one stage."""
+    import uuid
+
+    out, wire = str(tmp_path / "xsink"), str(tmp_path / "wire")
+
+    def land(rows):
+        spark.createDataFrame(rows, _X_SINK_SCHEMA).write.mode(
+            "append").partitionBy("stream_id", "file_seq").parquet(out)
+
+    rows = _run_rows(3)
+    land([(s, *r) for s in (0, 1) for r in rows if r[0] < 2])
+    W.export_wire_files_x(spark, out, wire, incremental=True)
+    land([(0, *r) for r in rows if r[0] == 2])  # stream 0 gains file 3
+
+    sc = spark.sparkContext
+    group = f"x-export-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "incremental Binlog-X export")
+    try:
+        m = W.export_wire_files_x(spark, out, wire, incremental=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sorted((r[0], r[1]) for r in m.collect()) == [(0, 1), (0, 2)]
+
+    st = sc.statusTracker()
+    jobs = sorted(st.getJobIdsForGroup(group))
+    stages = [[st.getStageInfo(s) for s in st.getJobInfo(j).stageIds]
+              for j in jobs]
+    assert len(jobs) == 4, f"export ran {len(jobs)} jobs"
+    assert [len(s) for s in stages].count(1) == 3  # one aggregate's result job
+    assert [s.numTasks for s in stages[-1]] == [1]  # the render
 
 
 def test_rows_v1_cross_decode():

@@ -125,11 +125,14 @@ def test_agg_view_sink_migrates_and_view_stays_correct(spark, tmp_path):
     sink.bucket_floor = 10
     sink.rebucket_cap = 50
 
-    b1 = spark.createDataFrame(_events(spark, 300, "A").collect(), _SCHEMA)
+    # 30 rows per writer core sit inside the [10, 50] × parallelism band
+    # → one bucket per writer core (pks stay a subset of b2's 0..2999)
+    par = spark.sparkContext.defaultParallelism
+    b1 = spark.createDataFrame(_events(spark, 30 * par, "A").collect(),
+                               _SCHEMA)
     sink(b1, batch_id=0)
     n0 = sink.n_buckets
-    # 300 rows sit inside the band → one bucket per writer core
-    assert n0 == spark.sparkContext.defaultParallelism
+    assert n0 == par
     assert sink.last_migration is None
 
     b2 = spark.createDataFrame(_events(spark, 3_000, "B", 0.5).collect(),

@@ -101,6 +101,43 @@ def test_stream_metrics_observed(spark, tmpdir):
     assert str(m["max_event_time"]).startswith("2024-01-")
 
 
+def test_directory_dataset_streams_in_place(spark, tmp_path):
+    """A directory dataset (``events.parquet/`` of part files) streams
+    from the directory itself: every row arrives, and nothing is staged
+    under the temp dir's ``cdc_stream_src``."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    staged = os.path.join(tempfile.gettempdir(), "cdc_stream_src")
+
+    def entries():
+        return set(os.listdir(staged)) if os.path.isdir(staged) else set()
+
+    before = entries()
+    t = pq.read_table(os.path.join(SF, "events.parquet"))
+    d = tmp_path / "sf" / "events.parquet"
+    d.mkdir(parents=True)
+    half = t.num_rows // 2
+    pq.write_table(t.slice(0, half), d / "part-0.parquet")
+    pq.write_table(t.slice(half), d / "part-1.parquet")
+    sf = str(tmp_path / "sf")
+    assert source._as_stream_dir(sf, "events") == str(d)
+
+    seen = []
+    q = (
+        source.read_events_stream(spark, sf, fan_out=False,
+                                  max_files_per_trigger=1)
+        .writeStream.foreachBatch(lambda df, _: seen.append(df.count()))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert sorted(seen) == sorted([half, t.num_rows - half])
+    assert entries() == before
+
+
 def test_transactional_apply_preserves_invariant_per_batch(spark, tmpdir):
     """TransactionApplier semantics in streaming: apply whole transactions
     per micro-batch; the bank-transfer invariant (constant total balance)
