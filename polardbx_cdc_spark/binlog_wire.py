@@ -2541,6 +2541,29 @@ def _read_sink_files(sink_dir: str, key_cols: list[str], keys: list[tuple],
         ).drop_columns(key_cols)
 
 
+def _sink_census(sink_dir: str, key_cols: list[str]
+                 ) -> tuple[dict[tuple, int], bool]:
+    """Rows per sink file (keyed by the ``key_cols`` values) and whether
+    the sink is txn-framed, with pyarrow and no Spark job: the parquet
+    footers under each ``file_seq=k`` / ``stream_id=s/file_seq=k``
+    directory, or a flat sink's key columns."""
+    import pyarrow.dataset as ds
+
+    d = ds.dataset(sink_dir, format="parquet", partitioning="hive")
+    frags = [(f, ds.get_partition_keys(f.partition_expression))
+             for f in d.get_fragments()]
+    counts: dict[tuple, int] = {}
+    if all(set(key_cols) <= p.keys() for _, p in frags):
+        for f, p in frags:
+            k = tuple(int(p[c]) for c in key_cols)
+            counts[k] = counts.get(k, 0) + f.metadata.num_rows
+    else:
+        for r in d.to_table(columns=key_cols).group_by(key_cols).aggregate(
+                [([], "count_all")]).to_pylist():
+            counts[tuple(int(r[c]) for c in key_cols)] = r["count_all"]
+    return counts, "txn_commit_tso" in d.schema.names
+
+
 def _merge_gno(ivs) -> list[tuple[int, int]]:
     """Sorted union of half-open gno intervals; adjacent ones coalesce."""
     merged: list[tuple[int, int]] = []
@@ -2591,24 +2614,24 @@ def export_wire_files(spark, sink_dir: str, wire_dir: str,
     re-rendered; the PREVIOUS_GTIDS fold reads only those files. Steady
     state re-renders the tail files regardless of history length.
 
-    File census: a standalone call counts rows per ``file_seq`` with one
-    Spark aggregate over the sink. ``BinlogSink`` supplies its own census
-    instead (``_census`` = (rows, rotate_rows, framed); internal): its
-    offsets are dense and ``file_seq = offset div rotate_rows``, so every
-    file's row count follows from the row count alone and a steady-state
-    cycle runs no Spark job over the sink.
+    File census: a standalone call counts rows per ``file_seq`` with
+    pyarrow, no Spark job: parquet footers of a partitioned sink, the key
+    column of a flat one. ``BinlogSink`` supplies its own census instead
+    (``_census`` = (rows, rotate_rows, framed); internal): its offsets are
+    dense and ``file_seq = offset div rotate_rows``, so every file's row
+    count follows from the row count alone and reads nothing.
 
-    Render tasks: one ``mapInPandas`` job over ``spark.range(tasks)``,
-    no exchange and no scan of the sink. Each task reads its files
-    straight from the sink with pyarrow, sorts each by offset, renders
-    and writes it; only the manifest (one row per file) comes back. The
-    task count is the parquet bytes to render ÷
-    ``spark.sql.files.maxPartitionBytes``, at least one and at most one
-    per file, with files grouped contiguously by bytes: a micro-batch's
-    few tail files render in ONE task (one Python worker; a task per
-    file starts more workers and raises peak RSS), and a full export of
-    a large sink fans out by volume. ``sink_dir`` and
-    ``wire_dir`` must be shared filesystem paths every executor opens.
+    Rendering reads each file straight from the sink with pyarrow, sorts
+    it by offset, renders and writes it; no Spark scan and no exchange.
+    The files to render split into groups by parquet bytes ÷
+    ``spark.sql.files.maxPartitionBytes`` (at least one group, at most one
+    per file, contiguous by bytes). ONE group — a micro-batch's few tail
+    files, or any sink smaller than that — renders in the calling
+    process, so a steady-state cycle runs no Spark job and starts no
+    Python worker. Several groups render as one ``mapInPandas`` job over
+    ``spark.range(groups)``, a task per group, and only the manifest (one
+    row per file) comes back; ``sink_dir`` and ``wire_dir`` must then be
+    shared filesystem paths every executor opens.
 
     EAGER: rendering executes inside this call on BOTH paths — the wire
     files exist on disk the moment it returns, and the returned manifest
@@ -2649,10 +2672,7 @@ def _export_chains(spark, sink_dir: str, wire_dir: str, chain: str | None,
         counts = {(seq,): min(rotate, n_rows - seq * rotate)
                   for seq in range(-(-n_rows // rotate))}
     else:
-        df = spark.read.parquet(sink_dir)
-        framed = "txn_commit_tso" in df.columns
-        counts = {tuple(int(v) for v in r[:-1]): r[-1]
-                  for r in df.groupBy(*key_cols).count().collect()}
+        counts, framed = _sink_census(sink_dir, key_cols)
     gtid = emit_gtid and framed
     manifest_path = os.path.join(
         wire_dir, "_manifest_x.json" if chain else "_manifest.json")
@@ -2911,27 +2931,35 @@ def _export_chains(spark, sink_dir: str, wire_dir: str, chain: str | None,
         ["txn_id", "txn_commit_tso"] if framed else []
     )
 
-    def render_tasks(batches):
-        for b in batches:
-            for i in b["id"]:
-                yield pd.DataFrame(
-                    [render_file(k, t.sort_by("offset").to_pandas())
-                     for k, t in _read_sink_files(
-                         sink_dir, key_cols, groups[i], partitioned, cols)],
-                    columns=key_cols + ["file_name", "n_events", "n_bytes"],
-                )
+    def render_group(keys: list[tuple]) -> list[tuple]:
+        return [render_file(k, t.sort_by("offset").to_pandas())
+                for k, t in _read_sink_files(
+                    sink_dir, key_cols, keys, partitioned, cols)]
 
-    # task i renders groups[i]. A SQL job, not an RDD one: RDD tasks get
-    # Python workers from a pool of their own, and the extra resident
-    # worker measured +2% peak RSS (~80 MB) on perfbench's attach
-    # workload, local[4].
     # EAGER by contract: the files exist the moment this call returns;
     # one row per rendered file comes back (bounded).
-    rows = (
-        spark.range(len(groups), numPartitions=len(groups))
-        .mapInPandas(render_tasks, out_schema)
-        .collect()
-    )
+    if len(groups) == 1:
+        # one group renders right here: a Spark task would first start a
+        # Python worker, a fixed cost larger than a micro-batch's render
+        rows = render_group(groups[0])
+    else:
+        def render_tasks(batches):
+            for b in batches:
+                for i in b["id"]:
+                    yield pd.DataFrame(
+                        render_group(groups[i]),
+                        columns=key_cols + ["file_name", "n_events", "n_bytes"],
+                    )
+
+        # task i renders groups[i]. A SQL job, not an RDD one: RDD tasks
+        # get Python workers from a pool of their own, and the extra
+        # resident worker measured +2% peak RSS (~80 MB) on perfbench's
+        # attach workload, local[4].
+        rows = (
+            spark.range(len(groups), numPartitions=len(groups))
+            .mapInPandas(render_tasks, out_schema)
+            .collect()
+        )
     if incremental:
         merged = dict(prev)
         for r in rows:

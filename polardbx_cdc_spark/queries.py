@@ -384,9 +384,9 @@ _MIN_TSO = "0001705276800000000" + "0" * 29  # 2024-01-15 00:00 UTC
 
 #: rotated-file count for the wire-directory FIXTURES (cdc_wire_stream_tail,
 #: cdc_dump_attach_decode): a multi-file chain with ROTATEs. It does not set
-#: the render's parallelism — export_wire_files sizes its tasks by parquet
-#: bytes, one task at bench scale — and the decode packs the files into
-#: tasks by Spark's file-split sizing.
+#: the render's parallelism — export_wire_files groups files by parquet
+#: bytes, one group rendered in process at bench scale — and the decode
+#: packs the files into tasks by Spark's file-split sizing.
 _WIRE_FIXTURE_FILES = 32
 
 #: session-scoped cache of rendered wire FIXTURES, keyed by (shape, sf_dir).
@@ -7595,11 +7595,13 @@ def _cdc_wire_fixture(spark: SparkSession, sf_dir: str) -> dict:
     TSO order, the layout the streaming BinlogSink writes, derived
     batch-side. The bucketed window here is FIXTURE construction
     (building a reproducible wire directory for the oracle), not the
-    production offset path — the real sink (BinlogSink._emit)
-    range-partitions adaptively. The render runs parquet bytes ÷
-    ``spark.sql.files.maxPartitionBytes`` tasks (``export_wire_files``):
-    at bench scale all 32 files render back to back in ONE Python task;
-    the file count shapes the chain, not the encode parallelism."""
+    production offset path — the real sink (BinlogSink._emit) numbers
+    rows in one ordered pass. The render groups files by parquet bytes ÷
+    ``spark.sql.files.maxPartitionBytes`` (``export_wire_files``): at
+    bench scale all 32 files form ONE group, rendered back to back in the
+    calling process, after a census that reads the fixture's key column
+    with pyarrow — no Spark job; the file count shapes the chain, not the
+    encode parallelism."""
     from polardbx_cdc_spark import binlog_wire
 
     def build(work: str) -> dict:

@@ -27,7 +27,7 @@ from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -299,12 +299,13 @@ class BinlogSink:
         if batch_id in self._seen_batches:
             return
         self._seen_batches.add(batch_id)
-        # one materialization: the sink takes several actions (disorder
-        # probe, range sampling, shuffle map / framed-mode joins) and the
-        # upstream plan may carry an observe() CollectMetrics node —
+        # one materialization: the framed path takes several actions on
+        # the batch (horizon, disorder check, write, open-txn carry), a
+        # replay batch adds the durable anti-join after the write, and
+        # the upstream plan may carry an observe() CollectMetrics node —
         # without the cache those metrics would double-count on every
-        # re-execution (r9 found this the hard way; skipping the persist
-        # saved 0.35s/batch but broke exact per-batch counters)
+        # re-execution (r9: skipping the persist saved 0.35s/batch but
+        # broke exact per-batch counters)
         batch_df.persist()
         try:
             if self.frame_txns:
@@ -335,8 +336,8 @@ class BinlogSink:
         disorder (absent — corruption). The anti-join against the durable
         slice is pruned by the parquet ``key`` min/max to the suspect range,
         so it costs nothing when there is no replay at all. (The non-framed
-        path never comes through here: _emit folds the suspect count AND
-        min into its stats pass and calls _probe_durable directly.)"""
+        path never comes through here: _emit observes the suspect count
+        AND min on its write and _write_batch calls _probe_durable.)"""
         suspects = suspects.persist()
         try:
             row = suspects.agg(
@@ -376,21 +377,23 @@ class BinlogSink:
     def _write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         # seekLastTso recovery semantics (LogFileGenerator.java:510-545):
         # anything at or below the last durable TSO was already written —
-        # a replay after checkpoint loss resumes, never duplicates. The
-        # disorder probe over those rows is FOLDED into _emit's stats
-        # pass (a `_suspect` flag rides the range exchange): steady-state
-        # batches pay zero extra jobs for it, and the durable anti-join
-        # runs only when the stats report suspects (r9 PERF candidate).
+        # a replay after checkpoint loss resumes, never duplicates. _emit
+        # drops those rows and counts them in its write's observation, so
+        # a steady batch pays no extra job for the disorder probe; the
+        # durable anti-join runs only when it reports suspects, after the
+        # live rows and the marks are durable.
+        low = self._last_tso
         flagged = batch_df.withColumn(
-            "_suspect",
-            (F.col("tso") <= F.lit(self._last_tso)) if self._last_tso else F.lit(False),
+            "_suspect", (F.col("tso") <= F.lit(low)) if low else F.lit(False)
         )
-        n, mx = self._emit(
-            flagged, sort_keys=["tso"], range_key="tso",
-            probe=("tso", self._last_tso, batch_id),
-        )
+        n, mx, n_sus, mn_sus = self._emit(flagged, ["tso"], _spread_parts(flagged))
         if n:
-            self._last_tso = max(self._last_tso, mx)
+            self._last_tso = max(low, mx)
+        if n_sus:
+            self._probe_durable(
+                flagged.filter(F.col("_suspect")).select("tso"),
+                "tso", low, batch_id, min_key=mn_sus,
+            )
 
     # -- framed (whole-transaction) path ------------------------------------
 
@@ -431,12 +434,12 @@ class BinlogSink:
             F.broadcast(closed_ids.select("txn_id")), "txn_id", "left_semi"
         )
         framed = frame_transactions(closed)
-        # whole transactions in commit order (Sorter.java semantics)
-        n, mx_commit = self._emit(
-            framed,
-            sort_keys=["txn_commit_tso", "frame_rank", "tso"],
-            range_key="txn_commit_tso",
-            max_col="txn_commit_tso",
+        # whole transactions in commit order (Sorter.java semantics),
+        # sized by the framing's input: the framing's joins triple
+        # Catalyst's estimate (10k events: 10.2 MB framed, 3.1 MB input)
+        n, mx_commit, _, _ = self._emit(
+            framed, ["txn_commit_tso", "frame_rank", "tso"],
+            _spread_parts(combined), max_col="txn_commit_tso",
         )
         if n:
             self._last_commit_tso = max(self._last_commit_tso, mx_commit)
@@ -456,99 +459,80 @@ class BinlogSink:
     # -- shared dense-offset writer -----------------------------------------
 
     def _emit(
-        self,
-        df: DataFrame,
-        sort_keys: list[str],
-        range_key: str,
-        max_col: str = "tso",
-        probe: tuple[str, str, int] | None = None,
-    ) -> tuple[int, str]:
-        """Dense global offsets WITHOUT a single-task global sort: range-
-        partition on the sort key (sampled bounds → partition i entirely
-        precedes partition i+1), sort within partitions in parallel, then
-        shift each partition by the cumulative count of its predecessors.
-        The only serial step is a tiny per-partition-count collect."""
-        spark = df.sparkSession
-        # no sortWithinPartitions here: the row_number window below sorts
-        # each partition anyway — pre-sorting would pay for the sort twice.
-        # No explicit partition count: AQE right-sizes the range exchange
-        # to the BATCH volume (a 100k-row micro-batch coalesces to a few
-        # tasks instead of defaultParallelism near-empty ones — r9
-        # profile: −0.4s/batch; a multi-GB backfill batch still fans out
-        # to advisory-sized partitions). Coalescing merges ADJACENT range
-        # partitions, so partition i still wholly precedes partition i+1
-        # and the dense-offset math below is unaffected. Without AQE the
-        # exchange would default to spark.sql.shuffle.partitions (200
-        # near-empty tasks + a 200-row stats collect per micro-batch), so
-        # fall back to the source's own width in that deployment.
-        if spark.conf.get("spark.sql.adaptive.enabled", "true").lower() == "true":
-            ranged = df.repartitionByRange(range_key)
-        else:
-            width = max(1, df.rdd.getNumPartitions())
-            ranged = df.repartitionByRange(width, range_key)
-        has_suspects = probe is not None and "_suspect" in df.columns
-        with_pid = ranged.withColumn("_pid", F.spark_partition_id()).persist()
+        self, df: DataFrame, sort_keys: list[str], parts: int, max_col: str = "tso"
+    ) -> tuple[int, str, int, str | None]:
+        """Append ``df``'s rows with dense global offsets in one ordered
+        pass, like the reference's single writer (LogFileGenerator numbers
+        events in TSO order as it writes them): exchange, sort by
+        ``sort_keys``, offset = part base + the row's index, write. Rows
+        flagged ``_suspect`` are counted and dropped. Returns (rows
+        written, their max ``max_col``, suspects, their min ``max_col``),
+        observed on the write; ``_offset`` has advanced. A small batch is
+        one part: three Spark jobs (cache fill, exchange map stage,
+        one-task sort + write). A large one is range-partitioned into
+        ``parts`` (``_spread_parts``) cached parts whose live rows are
+        counted first, so each part's base follows its predecessors'."""
+        suspect = F.col("_suspect") if "_suspect" in df.columns else F.lit(False)
+        spread = df.repartition(1) if parts == 1 else (
+            df.repartitionByRange(parts, *sort_keys).persist())
         try:
-            # one pass yields the per-partition counts (offset bases), the
-            # global high-water mark, AND (when a `_suspect` flag rides
-            # along) the disorder-probe count — keeps the sink at exactly
-            # two actions per steady-state batch (stats + write)
-            live = (~F.col("_suspect")) if has_suspects else F.lit(True)
-            aggs = [
-                F.sum(F.when(live, 1).otherwise(0)).alias("cnt"),
-                F.max(F.when(live, F.col(max_col))).alias("mx"),
-            ]
-            if has_suspects:
-                key = probe[0]
-                aggs.append(
-                    F.sum(F.when(F.col("_suspect"), 1).otherwise(0)).alias("n_sus")
-                )
-                aggs.append(
-                    F.min(F.when(F.col("_suspect"), F.col(key))).alias("mn_sus")
-                )
-            stats = with_pid.groupBy("_pid").agg(*aggs).collect()
-            if has_suspects:
-                key, low_mark, batch_id = probe
-                n_sus = sum(r["n_sus"] for r in stats)
-                if n_sus:
-                    # replay/disorder rows exist: the durable anti-join
-                    # reuses the cached exchange output; the suspect MIN
-                    # rode the same stats pass, so the probe issues only
-                    # the anti-join job itself
-                    mn_sus = min(
-                        r["mn_sus"] for r in stats if r["mn_sus"] is not None
-                    )
-                    self._probe_durable(
-                        with_pid.filter(F.col("_suspect")).select(key),
-                        key, low_mark, batch_id, min_key=mn_sus,
-                    )
-            counts = {r["_pid"]: r["cnt"] for r in stats}
-            n_total = sum(counts.values())
-            if n_total == 0:  # empty or pure-replay batch
-                return 0, ""
-            mx_total = max(r["mx"] for r in stats if r["mx"] is not None)
-            base, acc = {}, self._offset
-            for pid in sorted(counts):
-                base[pid] = acc
-                acc += counts[pid]
-            base_map = F.create_map(*[F.lit(x) for kv in base.items() for x in kv])
-            w_off = F.row_number().over(Window.partitionBy("_pid").orderBy(*sort_keys)) - 1
-            writable = (
-                with_pid.filter(live).drop("_suspect")
-                if has_suspects else with_pid
+            live = {} if parts == 1 else dict(
+                spread.filter(~suspect).groupBy(F.spark_partition_id()).count().collect())
+            bases = [self._offset + sum(live.get(q, 0) for q in range(p)) for p in range(parts)]
+            obs = Observation()
+            # observed before the suspect filter, so a batch of suspects
+            # only still counts them. Adaptive execution prunes the write
+            # of an EMPTY input with this node, and Spark's
+            # ObservationManager completes the observation with an empty
+            # row that ``Observation.get`` cannot convert: read its width.
+            ordered = (
+                spread.observe(obs, F.count_if(~suspect).alias("cnt"),
+                               F.max(F.when(~suspect, F.col(max_col))).alias("mx"),
+                               F.count_if(suspect).alias("n_sus"),
+                               F.min(F.when(suspect, F.col(max_col))).alias("mn_sus"))
+                .filter(~suspect)
+                .drop("_suspect")
+                .sortWithinPartitions(*sort_keys)
             )
-            out = (
-                writable.withColumn(
-                    "offset", (w_off + F.coalesce(base_map[F.col("_pid")], F.lit(0))).cast("long")
-                )
+            # index = the low 33 bits of the monotonic id. The bases come
+            # from a map keyed by the partition id, never an inlined long
+            # literal, which would make codegen compile new classes every
+            # batch; the coalesce keeps ``offset`` non-nullable.
+            base = F.coalesce(F.create_map(*[F.lit(x) for kv in enumerate(bases) for x in kv])[
+                F.spark_partition_id()], F.lit(0))
+            index = F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1)
+            (
+                ordered.withColumn("offset", (base + index).cast("long"))
                 .withColumn("file_seq", F.expr(f"offset div {self.rotate_rows}").cast("long"))
-                .drop("_pid")
+                .write.mode("append").partitionBy("file_seq").parquet(self.out_dir)
             )
-            out.write.mode("append").partitionBy("file_seq").parquet(self.out_dir)
-            self._offset += n_total
-            return n_total, mx_total
+            totals = obs.get if obs._jo.getRow().length() else {}
         finally:
-            with_pid.unpersist()
+            if parts > 1:
+                spread.unpersist()
+        n = totals.get("cnt", 0)
+        self._offset += n
+        return n, totals.get("mx"), totals.get("n_sus", 0), totals.get("mn_sus")
+
+
+def _spread_parts(df: DataFrame) -> int:
+    """How many ordered parts ``BinlogSink._emit`` writes a batch in: one
+    unless the batch's Catalyst size estimate (no job) gives every core
+    ``coalescePartitions.minPartitionSize``; else one per core or per
+    ``advisoryPartitionSizeInBytes``, whichever is more, at most
+    ``spark.sql.shuffle.partitions``. Sink wall per batch on local[4],
+    median of 3, one part vs four: 16k rows (perfbench catchup) 0.65 vs
+    0.86 s, 100k 1.87 vs 1.32 s, 600k (bench.py's steady drive) 7.99 vs
+    4.52 s."""
+    spark = df.sparkSession
+    conf = spark.conf.get
+    to_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
+    est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    cores = spark.sparkContext.defaultParallelism
+    if est < cores * to_bytes(conf("spark.sql.adaptive.coalescePartitions.minPartitionSize")):
+        return 1
+    by_size = -(-est // to_bytes(conf("spark.sql.adaptive.advisoryPartitionSizeInBytes")))
+    return min(int(conf("spark.sql.shuffle.partitions")), max(cores, by_size))
 
 
 class BinlogXSink:

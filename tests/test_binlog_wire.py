@@ -679,43 +679,120 @@ def test_binlog_sink_recover_refuses_census_mismatch(spark, sf_dir, tmp_path):
     assert same._offset == sink._offset
 
 
-def test_steady_state_sink_export_runs_one_render_task(spark, sf_dir, tmp_path):
-    """A steady-state BinlogSink wire export runs no Spark job over the
-    sink (no schema read, no file_seq count, no exchange): exactly one
-    job, the render, in one task."""
+def _group_jobs(sc, group: str) -> list[list[int]]:
+    """Task counts per stage of each job the job group ran, job order."""
+    st = sc.statusTracker()
+    return [[st.getStageInfo(s).numTasks for s in st.getJobInfo(j).stageIds]
+            for j in sorted(st.getJobIdsForGroup(group))]
+
+
+def _run_in_group(sc, tag: str, fn, *args):
+    """``(job group, fn(*args))``, with fn's Spark jobs in a fresh group."""
     import uuid
+
+    group = f"{tag}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, tag)
+    try:
+        return group, fn(*args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def _steady_sink(spark, sf_dir, tmpdir):
+    """A plain BinlogSink with a wire dir, its watermark armed by a first
+    600-row batch, and the rest of the CDC frame: strictly newer rows,
+    so the second batch replays nothing."""
+    from pyspark.sql import functions as F
 
     from polardbx_cdc_spark.model import derive_cdc_stream
     from polardbx_cdc_spark.streaming import pipeline
 
-    tmpdir = str(tmp_path)
     cdc = derive_cdc_stream(spark, sf_dir)
     first = cdc.orderBy("tso").limit(600)
-    rest = cdc.join(first.select("tso"), "tso", "left_anti")
     sink = pipeline.BinlogSink(tmpdir + "/binlog", rotate_rows=250,
                                wire_dir=tmpdir + "/wire")
     sink.recover(spark)
     sink(first, batch_id=0)
+    return sink, cdc.filter(F.col("tso") > sink._last_tso)
 
+
+def test_steady_state_sink_export_runs_no_spark_job(spark, sf_dir, tmp_path):
+    """A steady-state BinlogSink wire export runs no Spark job: the
+    census comes from the sink's own offset and the one group of tail
+    files renders in the calling process."""
+    import json
+    import os
+
+    sink, rest = _steady_sink(spark, sf_dir, str(tmp_path))
     sc = spark.sparkContext
-    group = f"wire-export-{uuid.uuid4().hex}"
-    export = sink._export_wire
+    export, groups = sink._export_wire, []
 
     def traced(s):
-        sc.setJobGroup(group, "steady-state wire export")
-        try:
-            export(s)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
+        groups.append(_run_in_group(sc, "steady-state wire export", export, s)[0])
 
     sink._export_wire = traced
     sink(rest, batch_id=1)  # grows file 2, starts file 3
 
-    st = sc.statusTracker()
-    jobs = st.getJobIdsForGroup(group)
-    assert len(jobs) == 1, f"export ran {len(jobs)} jobs"
-    stages = [st.getStageInfo(s) for s in st.getJobInfo(jobs[0]).stageIds]
-    assert [s.numTasks for s in stages] == [1]
+    with open(os.path.join(str(tmp_path / "wire"), "_manifest.json")) as fh:
+        assert sum(v["n"] for v in json.load(fh).values()) == sink._offset
+    assert _group_jobs(sc, groups[0]) == []
+
+
+def test_render_in_process_equals_render_tasks(spark, sf_dir, tmp_path):
+    """Both sides of the render selection write the same bytes: a sink
+    exported as one group (rendered in the calling process, no Spark
+    job) and as several groups (one ``mapInPandas`` task each, forced by
+    a small ``spark.sql.files.maxPartitionBytes``)."""
+    from polardbx_cdc_spark.model import derive_cdc_stream
+    from polardbx_cdc_spark.streaming import pipeline
+
+    tmpdir, sc = str(tmp_path), spark.sparkContext
+    sink = pipeline.BinlogSink(tmpdir + "/binlog", rotate_rows=150)
+    sink.recover(spark)
+    sink(derive_cdc_stream(spark, sf_dir), batch_id=0)
+
+    one, _ = _run_in_group(sc, "one group", W.export_wire_files, spark,
+                           sink.out_dir, tmpdir + "/one")
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4096")
+    try:
+        many, _ = _run_in_group(sc, "several groups", W.export_wire_files,
+                                spark, sink.out_dir, tmpdir + "/many")
+    finally:
+        spark.conf.set(key, old)
+
+    assert _group_jobs(sc, one) == []
+    tasks = _group_jobs(sc, many)
+    assert len(tasks) == 1 and tasks[0][0] > 1  # one render job, several tasks
+    got, want = _wire_files(tmpdir + "/many"), _wire_files(tmpdir + "/one")
+    assert len(want) > 3 and got == want
+
+
+def test_steady_sink_batch_runs_three_jobs_and_no_python(spark, sf_dir, tmp_path):
+    """A whole steady BinlogSink batch (watermark armed, no replay, wire
+    export on) is three Spark jobs — the batch cache fill, the exchange
+    to one partition, the one-task sort + write — and no stage runs
+    Python: the wire render runs in the calling process."""
+    import re
+
+    sink, rest = _steady_sink(spark, sf_dir, str(tmp_path))
+    sc = spark.sparkContext
+    group, _ = _run_in_group(sc, "steady sink batch", sink, rest, 1)
+
+    jobs = _group_jobs(sc, group)
+    assert len(jobs) == 3, f"one steady batch ran {len(jobs)} jobs: {jobs}"
+    assert jobs[-1][-1] == 1  # the write: one task
+    st = spark._jsparkSession.sharedState().statusStore()
+    ids = set(sc.statusTracker().getJobIdsForGroup(group))
+    plans = [e.physicalPlanDescription()
+             for e in (st.executionsList().apply(i)
+                       for i in range(st.executionsList().size()))
+             if ids & {int(j) for j in
+                       e.jobs().keySet().mkString(",").split(",") if j}]
+    assert plans
+    for plan in plans:
+        assert not re.search(r"Python|InPandas|InArrow", plan), plan
 
 
 def test_xa_prepare_and_sequence_round_trip():
@@ -1145,15 +1222,10 @@ def test_export_wire_files_x_reads_int_count_manifest(spark, tmp_path):
             for f in os.listdir(wire)} == before
 
 
-def test_incremental_x_export_runs_census_and_one_render_task(spark, tmp_path):
-    """An incremental Binlog-X export over a 2-stream sink runs the one
-    census aggregate and one render job of a single one-task stage: no
-    separate max(file_seq) job and no render exchange. Adaptive
-    execution runs a shuffled aggregate as two jobs (map, then result)
-    after the parquet schema read, so the census is three jobs and the
-    only job with more than one stage."""
-    import uuid
-
+def test_incremental_x_export_runs_no_spark_job(spark, tmp_path):
+    """An incremental Binlog-X export over a 2-stream sink runs no Spark
+    job: the census reads the partition footers with pyarrow and the
+    one group of changed files renders in the calling process."""
     out, wire = str(tmp_path / "xsink"), str(tmp_path / "wire")
 
     def land(rows):
@@ -1166,21 +1238,10 @@ def test_incremental_x_export_runs_census_and_one_render_task(spark, tmp_path):
     land([(0, *r) for r in rows if r[0] == 2])  # stream 0 gains file 3
 
     sc = spark.sparkContext
-    group = f"x-export-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "incremental Binlog-X export")
-    try:
-        m = W.export_wire_files_x(spark, out, wire, incremental=True)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    group, m = _run_in_group(sc, "incremental Binlog-X export",
+                             W.export_wire_files_x, spark, out, wire, True)
+    assert _group_jobs(sc, group) == []
     assert sorted((r[0], r[1]) for r in m.collect()) == [(0, 1), (0, 2)]
-
-    st = sc.statusTracker()
-    jobs = sorted(st.getJobIdsForGroup(group))
-    stages = [[st.getStageInfo(s) for s in st.getJobInfo(j).stageIds]
-              for j in jobs]
-    assert len(jobs) == 4, f"export ran {len(jobs)} jobs"
-    assert [len(s) for s in stages].count(1) == 3  # one aggregate's result job
-    assert [s.numTasks for s in stages[-1]] == [1]  # the render
 
 
 def test_rows_v1_cross_decode():

@@ -688,6 +688,144 @@ def test_strict_sink_replay_vs_provable_disorder(spark, tmpdir):
         strict_sink(rogue, batch_id=1000)
 
 
+@pytest.fixture(params=["one_part", "parts"])
+def spread(request, spark):
+    """Both sides of BinlogSink._emit's size selection: at the default
+    confs a test batch goes to one part; a 1-byte minimum partition size
+    range-partitions it into several (pipeline._spread_parts)."""
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    old = spark.conf.get(key)
+    if request.param == "parts":
+        spark.conf.set(key, "1b")
+    try:
+        yield request.param
+    finally:
+        spark.conf.set(key, old)
+
+
+def _sink_holding(spark, tmpdir, n_rows, strict=False):
+    """A plain BinlogSink that already holds the first ``n_rows`` CDC
+    rows in TSO order, and the CDC frame in TSO order."""
+    cdc = derive_cdc_stream(spark, SF).orderBy("tso")
+    sink = pipeline.BinlogSink(tmpdir + "/out", rotate_rows=150, strict=strict)
+    sink.recover(spark)
+    sink(cdc.limit(n_rows), batch_id=0)
+    return sink, cdc
+
+
+def _parquet_files(d):
+    import os
+
+    return sorted(os.path.join(r, f) for r, _, fs in os.walk(d)
+                  for f in fs if f.endswith(".parquet"))
+
+
+def test_sink_mixed_batch_writes_new_rows_once_then_raises_disorder(spark, tmpdir, spread):
+    """A batch of durable replays, new rows and one rogue low-TSO row
+    absent from the sink, under strict=True: the new rows are written
+    once with dense offsets, the marks advance past them, and then the
+    sink raises "TSO disorder"."""
+    sink, cdc = _sink_holding(spark, tmpdir, 300, strict=True)
+    rogue = cdc.limit(1).withColumn("tso", F.concat(F.lit("0"), F.col("tso")))
+    mixed = cdc.limit(400).unionByName(rogue)
+    with pytest.raises(RuntimeError, match="TSO disorder"):
+        sink(mixed, batch_id=1)
+
+    rows = spark.read.parquet(sink.out_dir).select("offset", "tso").collect()
+    want = [r["tso"] for r in cdc.limit(400).select("tso").collect()]
+    assert sorted(r["offset"] for r in rows) == list(range(400))
+    assert [r["tso"] for r in sorted(rows)] == want
+    assert sink._offset == 400
+    assert sink._last_tso == want[-1]
+    assert len(sink.disorder_errors) == 1
+
+
+def test_sink_pure_replay_batch_writes_nothing(spark, tmpdir, spread):
+    """A batch whose rows are all durable already writes no file and
+    changes neither mark, nor raises under strict=True."""
+    sink, cdc = _sink_holding(spark, tmpdir, 300, strict=True)
+    before, marks = _parquet_files(sink.out_dir), (sink._offset, sink._last_tso)
+    sink(cdc.limit(200), batch_id=1)
+    assert _parquet_files(sink.out_dir) == before
+    assert (sink._offset, sink._last_tso) == marks
+    assert not sink.disorder_errors
+
+
+def test_sink_empty_batch_returns_and_writes_nothing(spark, tmpdir, spread):
+    """A batch with no rows at all, watermark armed: adaptive execution
+    prunes the empty write together with its observation, which Spark
+    completes with an empty row. The sink must return, write no parquet
+    file and change neither mark. ``limit(0)`` is empty at plan time
+    (a zero size estimate: one part); the filter is empty only at run
+    time, so it keeps its parent's estimate and takes either side."""
+    import threading
+
+    sink, cdc = _sink_holding(spark, tmpdir, 300)
+    assert sink._last_tso
+    before, marks = _parquet_files(sink.out_dir), (sink._offset, sink._last_tso)
+    for batch_id, empty in enumerate([cdc.limit(0), cdc.filter(F.col("tso") < "0")], 1):
+        errors: list[BaseException] = []
+
+        def call():
+            try:
+                sink(empty, batch_id=batch_id)
+            except BaseException as exc:  # noqa: BLE001 — re-raised below
+                errors.append(exc)
+
+        t = threading.Thread(target=call, daemon=True)
+        t.start()
+        t.join(180)
+        assert not t.is_alive(), "an empty batch blocked in BinlogSink"
+        assert not errors, errors
+        assert _parquet_files(sink.out_dir) == before
+        assert (sink._offset, sink._last_tso) == marks
+
+
+@pytest.mark.parametrize("frame_txns", [False, True])
+def test_sink_parts_write_the_one_part_sink(spark, tmpdir, monkeypatch, frame_txns):
+    """Both sides of the size selection write the same sink: three
+    batches (the later ones re-deliver the earlier rows) through a sink
+    kept in one part and through one range-partitioned into several give
+    identical rows on offset, file_seq and every column."""
+    cdc = derive_cdc_stream(spark, SF).orderBy("tso")
+    n = cdc.count()
+    batches = [cdc.limit(n // 3), cdc.limit(2 * n // 3), cdc]
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    old = spark.conf.get(key)
+    chosen: list[int] = []
+    real = pipeline._spread_parts
+
+    def spy(df):
+        chosen.append(real(df))
+        return chosen[-1]
+
+    monkeypatch.setattr(pipeline, "_spread_parts", spy)
+
+    def run(tag):
+        sink = pipeline.BinlogSink(f"{tmpdir}/{tag}", rotate_rows=150,
+                                   frame_txns=frame_txns, txn_gap_seconds=0)
+        sink.recover(spark)
+        for i, b in enumerate(batches):
+            sink(b, batch_id=i)
+        if frame_txns:
+            sink.flush()
+        rows = spark.read.parquet(f"{tmpdir}/{tag}").collect()
+        return sorted(rows, key=lambda r: r["offset"]), sink._offset
+
+    one, n_one = run("one")
+    assert set(chosen) == {1}
+    spark.conf.set(key, "1b")
+    try:
+        chosen.clear()
+        parts, n_parts = run("parts")
+    finally:
+        spark.conf.set(key, old)
+    assert min(chosen) > 1
+    assert n_one == n_parts == len(one) > 0
+    assert [r["offset"] for r in one] == list(range(len(one)))
+    assert parts == one
+
+
 def test_replica_sink_rewrites_only_touched_buckets(spark, tmpdir):
     """Incremental contract: a batch touching few keys rewrites only those
     keys' buckets; untouched bucket files stay byte-identical on disk."""
@@ -1870,11 +2008,11 @@ def test_wire_stream_integer_stream_zero(spark, tmp_path):
 
 
 def test_disorder_probe_folded_into_stats_pass(spark, tmpdir, monkeypatch):
-    """Round-10 (r9 PERF candidate): the disorder probe rides _emit's
-    stats pass. A steady-state batch (watermark set, zero replay rows)
-    must trigger NO DataFrame.count() job at all — the suspect count
-    arrives inside the per-partition stats collect — while a batch WITH
-    replay rows still runs the durable anti-join and dedups correctly."""
+    """The disorder probe costs a steady batch nothing: a batch with the
+    watermark set and zero replay rows must trigger NO DataFrame.count()
+    job at all — the suspect count arrives in the Observation on _emit's
+    ordered write — while a batch WITH replay rows still runs the durable
+    anti-join and dedups correctly."""
     from pyspark.sql import DataFrame
 
     cdc = derive_cdc_stream(spark, SF).persist()
@@ -1996,10 +2134,9 @@ def test_spool_segments_carry_fde_and_decode_none_streams(tmpdir):
 
 
 def test_emit_without_aqe_uses_source_width(spark, tmpdir):
-    """ADVICE r9: with spark.sql.adaptive.enabled=false the dense-offset
-    range exchange must size itself from the SOURCE's width, not default
-    to spark.sql.shuffle.partitions' near-empty tasks — and the sink
-    output stays byte-correct (dense offsets, ordered)."""
+    """With spark.sql.adaptive.enabled=false the sink still writes dense,
+    ordered offsets from its ordered pass, and the exchange stays narrow
+    (no spark.sql.shuffle.partitions' worth of near-empty files)."""
     cdc = derive_cdc_stream(spark, SF).orderBy("tso").limit(1000)
     old = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
