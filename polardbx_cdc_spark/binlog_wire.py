@@ -40,11 +40,21 @@ Scope (honest slice, round-trip-tested byte-for-byte):
   off inner events re-framed on decode; NONE natively, ZSTD when the
   zstandard package is present). Out of scope: encrypted binlog.
 
-Spark-side plumbing is in ``events_to_binlog`` / ``binlog_to_events``:
-Arrow-batched ``mapInPandas`` over the CDC frame — serialization is
-embarrassingly parallel per partition (the reference serializes
-per-stream on one thread; Spark gets the same per-file ordering from the
-sink's offset assignment while encoding all files concurrently).
+Decoded events reach consumers through ONE frame walk,
+``wire_frame_cols``: it classifies events into consumer rows, assigns
+their replication position and picks the surfaced row image. The attach
+paths are projections of it — ``read_wire_binlog`` / ``wire_stream``
+(the frame), ``binlog_to_events`` (the row kinds as a CDC frame),
+``binlog_to_table`` and ``decode_wire_with_registry`` (typed images).
+``decode_named_rows`` walks on its own, since it reads the TABLE_MAP
+metadata (names, labels, key) the frame does not carry.
+
+Spark-side plumbing is Arrow-batched ``mapInPandas``: ``events_to_binlog``
+and ``export_wire_files`` encode, the attach paths above decode.
+Serialization is embarrassingly parallel per partition (the reference
+serializes per-stream on one thread; Spark gets the same per-file
+ordering from the sink's offset assignment while encoding all files
+concurrently).
 """
 
 from __future__ import annotations
@@ -84,6 +94,18 @@ ROWS_EVENTS = frozenset(
 UPDATE_EVENTS = frozenset(
     (UPDATE_ROWS_EVENT, UPDATE_ROWS_EVENT_V1, PARTIAL_UPDATE_ROWS_EVENT)
 )
+#: decoded ROWS event type → the action of its rows (the frame ``kind``)
+_FRAME_ACTION = {
+    WRITE_ROWS_EVENT: "INSERT",
+    UPDATE_ROWS_EVENT: "UPDATE",
+    DELETE_ROWS_EVENT: "DELETE",
+    WRITE_ROWS_EVENT_V1: "INSERT",
+    UPDATE_ROWS_EVENT_V1: "UPDATE",
+    DELETE_ROWS_EVENT_V1: "DELETE",
+    PARTIAL_UPDATE_ROWS_EVENT: "UPDATE",
+}
+#: the frame kinds that carry a row image
+_ROW_KINDS = ("INSERT", "UPDATE", "DELETE")
 #: json_diff.h enum_json_diff_operation
 JSON_DIFF_REPLACE = 0
 JSON_DIFF_INSERT = 1
@@ -1672,15 +1694,25 @@ def decode_events(buf: bytes, verify_crc: bool = True,
     pos = 0
     csum = CHECKSUM_LEN  # per-stream trailer width, set by each FDE
     while pos < len(buf):
-        if tolerate_truncation and pos + HEADER_LEN > len(buf):
-            break
+        if pos + HEADER_LEN > len(buf):
+            if tolerate_truncation:
+                break
+            raise ValueError(
+                f"truncated event header ({len(buf) - pos} of {HEADER_LEN} "
+                f"bytes) at offset {pos}")
         ts, tc, sid, elen, npos, flags = struct.unpack_from("<IBIIIH", buf, pos)
         if elen < HEADER_LEN + csum:
             if tolerate_truncation:
                 break  # garbage header (e.g. zeroed tail from a crash)
             raise ValueError(f"invalid event length {elen} at offset {pos}")
-        if tolerate_truncation and pos + elen > len(buf):
-            break
+        if pos + elen > len(buf):
+            # a torn tail, or a corrupted event_size running past the
+            # buffer: every later read of this frame would be out of bounds
+            if tolerate_truncation:
+                break
+            raise ValueError(
+                f"truncated event ({len(buf) - pos} of {elen} bytes) "
+                f"at offset {pos}")
         frame = buf[pos : pos + elen]
         trail = csum  # this event's own trailer width
         fde_has_alg = False
@@ -2212,18 +2244,12 @@ def decode_named_rows(buf: bytes, verify_crc: bool = True) -> list[dict]:
     own TLVs. This is what lets a downstream consume a stream it has
     never seen a schema for (the reference's column-aware processing
     reads the same TABLE_MAP fields, TableMapLogEvent.java)."""
-    _ACTION = {
-        WRITE_ROWS_EVENT: "INSERT", UPDATE_ROWS_EVENT: "UPDATE",
-        DELETE_ROWS_EVENT: "DELETE", WRITE_ROWS_EVENT_V1: "INSERT",
-        UPDATE_ROWS_EVENT_V1: "UPDATE", DELETE_ROWS_EVENT_V1: "DELETE",
-        PARTIAL_UPDATE_ROWS_EVENT: "UPDATE",
-    }
     out: list[dict] = []
     defs: dict[tuple[str, str], dict] = {}
     for ev in expand_payload_events(decode_events(buf, verify_crc=verify_crc)):
         if ev["type"] == TABLE_MAP_EVENT and "col_names" in ev:
             defs[(ev["db"], ev["tbl"])] = ev
-        elif ev["type"] in _ACTION:
+        elif ev["type"] in _FRAME_ACTION:
             dmap = defs.get((ev["db"], ev["tbl"]))
             names = ev.get("col_names") or (dmap or {}).get("col_names")
             if names is None:
@@ -2276,7 +2302,7 @@ def decode_named_rows(buf: bytes, verify_crc: bool = True) -> list[dict]:
                     pkd = {names[i]: img.get(names[i]) for i in pk_cols}
                 out.append({
                     "db": ev["db"], "tbl": ev["tbl"],
-                    "action": _ACTION[ev["type"]],
+                    "action": _FRAME_ACTION[ev["type"]],
                     "pk": pkd,
                     "values": img,
                     **({"before": before, "after": after}
@@ -2347,7 +2373,7 @@ def recover_wire_file(path: str) -> tuple[int, int]:
 CDC_TABLE_TYPES = ["varchar(64)", "double"]
 
 
-def events_to_binlog(df, out_schema: str = "db string, tbl string, n_events int, payload binary"):
+def events_to_binlog(df):
     """Serialize a CDC frame (db, tbl, action, pk, value, tso) into binlog
     wire bytes — one blob per (partition × table run), each blob a
     TABLE_MAP + one ROWS event per change, CRC32-checksummed.
@@ -2435,73 +2461,47 @@ def events_to_binlog(df, out_schema: str = "db string, tbl string, n_events int,
                 out_rows, columns=["db", "tbl", "n_events", "payload"]
             )
 
-    return df.mapInPandas(encode_partition, out_schema)
+    return df.mapInPandas(
+        encode_partition, "db string, tbl string, n_events int, payload binary"
+    )
 
 
-def binlog_to_events(df, payload_col: str = "payload",
-                     out_schema: str = "db string, tbl string, action string, pk string, value double"):
-    """Decode wire-byte blobs back into a CDC frame — the attach path a
-    binlog consumer runs, as a distributed scan (one decode per blob,
-    Arrow-batched)."""
-    _ACTION = {
-        WRITE_ROWS_EVENT: "INSERT",
-        UPDATE_ROWS_EVENT: "UPDATE",
-        DELETE_ROWS_EVENT: "DELETE",
-        WRITE_ROWS_EVENT_V1: "INSERT",
-        UPDATE_ROWS_EVENT_V1: "UPDATE",
-        DELETE_ROWS_EVENT_V1: "DELETE",
-        PARTIAL_UPDATE_ROWS_EVENT: "UPDATE",
-    }
+def binlog_to_events(df):
+    """Decode wire-byte blobs (a ``payload`` column of bare event streams:
+    ``events_to_binlog`` output, dump spool segments) back into a CDC
+    frame (db, tbl, action, pk, value) — the attach path a binlog
+    consumer runs, as a distributed scan (one decode per blob,
+    Arrow-batched). The rows are the row kinds of `wire_frame_cols`,
+    their kind as the action."""
+    return df.mapInPandas(
+        _decode_event_blobs,
+        "db string, tbl string, action string, pk string, value double",
+    )
 
-    def decode_partition(batches):
-        import pandas as pd
 
-        for pdf in batches:
-            # columnar build (r14, guide §4.2): constant-per-event
-            # db/tbl/action extend by list multiplication; pk/value via
-            # one comprehension per event — no per-row 5-tuple +
-            # row→column transpose in pandas
-            dbs: list = []
-            tbls: list = []
-            acts: list = []
-            pks: list = []
-            vals: list = []
-            for blob in pdf[payload_col]:
-                for ev in expand_payload_events(decode_events(bytes(blob))):
-                    tc = ev["type"]
-                    if tc not in _ACTION:
-                        continue
-                    rows = ev["rows"]
-                    if tc in UPDATE_EVENTS:
-                        imgs = [r[1] for r in rows]
-                        if tc == PARTIAL_UPDATE_ROWS_EVENT:
-                            # partial JSON (type 39): never surface raw
-                            # JsonDiff objects into the double column —
-                            # materialize against the before image and
-                            # keep only a numeric result
-                            for r, img in zip(rows, imgs):
-                                v = img[1]
-                                if isinstance(v, JsonDiffVector):
-                                    doc = apply_json_diffs(r[0][1], v)
-                                    v = (float(doc) if isinstance(
-                                        doc, (int, float)) else None)
-                                vals.append(v)
-                        else:
-                            vals.extend(i[1] for i in imgs)
-                    else:
-                        imgs = rows
-                        vals.extend(i[1] for i in imgs)
-                    pks.extend(i[0] for i in imgs)
-                    n = len(rows)
-                    dbs.extend([ev["db"]] * n)
-                    tbls.extend([ev["tbl"]] * n)
-                    acts.extend([_ACTION[tc]] * n)
-            yield pd.DataFrame(
-                {"db": dbs, "tbl": tbls, "action": acts,
-                 "pk": pks, "value": vals}
-            )
+def _decode_event_blobs(batches):
+    """`binlog_to_events`' ``mapInPandas`` body: a projection of the frame
+    walk onto its row kinds, one output batch per input batch."""
+    import pandas as pd
 
-    return df.mapInPandas(decode_partition, out_schema)
+    for pdf in batches:
+        dbs: list = []
+        tbls: list = []
+        acts: list = []
+        pks: list = []
+        vals: list = []
+        for blob in pdf["payload"]:
+            c = wire_frame_cols(None, bytes(blob))
+            dbs += c["db"]
+            tbls += c["tbl"]
+            acts += c["kind"]
+            pks += c["pk"]
+            vals += c["value"]
+        out = pd.DataFrame(
+            {"db": dbs, "tbl": tbls, "action": acts, "pk": pks, "value": vals}
+        )
+        rows = out["action"].isin(_ROW_KINDS)
+        yield out if rows.all() else out[rows]
 
 
 def _sink_file_dir(sink_dir: str, key_cols: list[str], key: tuple) -> str:
@@ -2973,119 +2973,125 @@ def _export_chains(spark, sink_dir: str, wire_dir: str, chain: str | None,
     return spark.createDataFrame(rows, out_schema)
 
 
-_FRAME_ACTION = {
-    WRITE_ROWS_EVENT: "INSERT",
-    UPDATE_ROWS_EVENT: "UPDATE",
-    DELETE_ROWS_EVENT: "DELETE",
-    WRITE_ROWS_EVENT_V1: "INSERT",
-    UPDATE_ROWS_EVENT_V1: "UPDATE",
-    DELETE_ROWS_EVENT_V1: "DELETE",
-    PARTIAL_UPDATE_ROWS_EVENT: "UPDATE",
-}
+def wire_frame_cols(name: str | None, buf: bytes,
+                    tolerate_truncation: bool = False,
+                    images: bool = False) -> dict[str, list]:
+    """THE frame walk: the one place that classifies decoded events into
+    consumer rows. One wire file's bytes become a dict of 8 equal-length
+    column lists (file_name, pos, kind, db, tbl, pk, value, xid). The
+    batch, streaming, registry-typed and blob attaches
+    (`read_wire_binlog`, `streaming.source.wire_stream`,
+    `decode_wire_with_registry`, `binlog_to_events`, `binlog_to_table`)
+    are projections of these columns, so every path assigns identical
+    replication positions and an applier can move between them.
 
+    ``pos`` is the row index within the file counting EVERY surfaced row:
+    - one row per image of a ROWS event (v1, v2 and type 39), kind
+      INSERT/UPDATE/DELETE. The surfaced image is the AFTER image of an
+      UPDATE, with type-39 JSON diff vectors materialized against the
+      before image, and the row image otherwise. ``pk`` is its column 0
+      as text (a MINIMAL after image omits the unchanged key; the before
+      image supplies it), ``value`` its column 1 when that is a double,
+      else None — narrower or differently-typed tables surface what they
+      have (typed decode reads ``image``).
+    - BEGIN; DDL (a QUERY event: db, statement text in the pk slot);
+      COMMIT (xid); TRACE (ROWS_QUERY text in the pk slot); GCN (gcn in
+      the xid slot); INCIDENT (message in the pk slot, number in the xid
+      slot — a replica must see the gap as a typed row).
 
-def wire_frame_cols(name: str, buf: bytes,
-                    tolerate_truncation: bool = False) -> dict[str, list]:
-    """Columnar twin of ``wire_frame_rows(include_values=False)``: the
-    SAME event walk and position assignment, materialized as a dict of 8
-    equal-length column lists (file_name, pos, kind, db, tbl, pk, value,
-    xid). The batch attach and the streaming attach build their Arrow
-    batches straight from these columns — the per-row 8-tuple build plus
-    pandas' row→column transpose was the stream-tail family's biggest
-    remaining Python-boundary cost after the compiled decoders (guide
-    §4.2; r14). Constant-per-event columns (kind/db/tbl) extend by list
-    multiplication instead of one append per row.
+    Columns are built directly, with no per-row tuple and no pandas
+    row→column transpose; the loop appends per row, because exported
+    chains carry about one row per ROWS event, where a per-event
+    comprehension costs more than it saves.
 
-    ``wire_frame_rows(include_values=False)`` delegates here, so batch,
-    stream and registry consumers keep ONE position recipe; parity with
-    the ``include_values=True`` walk is pinned by
-    test_binlog_wire.test_wire_frame_cols_matches_rows."""
-    if buf[:4] == MAGIC:
-        buf = buf[4:]
-    elif not tolerate_truncation:
-        raise ValueError(f"{name}: not a binlog file (bad magic)")
+    ``name=None`` reads a bare event stream with no file magic (a spool
+    segment, an ``events_to_binlog`` blob); a named file must open with
+    the magic unless ``tolerate_truncation``, which also stops cleanly at
+    a torn tail (a tailed relay file) instead of raising. ``images=True``
+    adds two columns: ``image``, the surfaced image's full value list
+    (columns absent from a partial image padded to None), and
+    ``present``, the surfaced image's present-column index list for a
+    binlog_row_image=MINIMAL/NOBLOB image or None for a full one. Both
+    are None on non-row kinds."""
+    if name is not None:
+        if buf[:4] == MAGIC:
+            buf = buf[4:]
+        elif not tolerate_truncation:
+            raise ValueError(f"{name}: not a binlog file (bad magic)")
     kinds: list = []
     dbs: list = []
     tbls: list = []
     pks: list = []
     vals: list = []
     xids: list = []
+    imgs: list = []
+    pres: list = []
+
+    def mark(kind, db=None, pk=None, xid=None):
+        kinds.append(kind)
+        dbs.append(db)
+        tbls.append(None)
+        pks.append(pk)
+        vals.append(None)
+        xids.append(xid)
+        if images:
+            imgs.append(None)
+            pres.append(None)
+
     for ev in expand_payload_events(
         decode_events(buf, tolerate_truncation=tolerate_truncation)
     ):
         tc = ev["type"]
-        if tc in _FRAME_ACTION:
-            rows = ev["rows"]
-            n = len(rows)
-            if tc in UPDATE_EVENTS:
-                for row in rows:
-                    img = row[1]
-                    # MINIMAL after-images omit the unchanged pk — the
-                    # before-image carries it (same rule as the row walk)
-                    pk_img = img if img and img[0] is not None else row[0]
-                    pks.append(
-                        str(pk_img[0])
-                        if pk_img and pk_img[0] is not None
-                        else None
-                    )
-                    v = img[1] if len(img) > 1 else None
-                    vals.append(v if isinstance(v, float) else None)
-            else:
-                for img in rows:
-                    pks.append(
-                        str(img[0])
-                        if img and img[0] is not None
-                        else None
-                    )
-                    v = img[1] if len(img) > 1 else None
-                    vals.append(v if isinstance(v, float) else None)
-            kinds.extend([_FRAME_ACTION[tc]] * n)
-            dbs.extend([ev["db"]] * n)
-            tbls.extend([ev["tbl"]] * n)
-            xids.extend([None] * n)
+        kind = _FRAME_ACTION.get(tc)
+        if kind is not None:
+            db, tbl = ev["db"], ev["tbl"]
+            update = tc in UPDATE_EVENTS
+            present = ev.get("present_columns_after" if update
+                             else "present_columns")
+            for row in ev["rows"]:
+                if update:
+                    before, img = row
+                    if tc == PARTIAL_UPDATE_ROWS_EVENT:
+                        img = [
+                            apply_json_diffs(b, a)
+                            if isinstance(a, JsonDiffVector) else a
+                            for b, a in zip(before, img)
+                        ]
+                    # MINIMAL after images omit the unchanged key: the
+                    # before image carries it
+                    pk = img[0] if img else None
+                    if pk is None and before:
+                        pk = before[0]
+                else:
+                    img = row
+                    pk = img[0] if img else None
+                v = img[1] if len(img) > 1 else None
+                kinds.append(kind)
+                dbs.append(db)
+                tbls.append(tbl)
+                pks.append(pk if pk.__class__ is str or pk is None else str(pk))
+                vals.append(v if v.__class__ is float else None)
+                xids.append(None)
+                if images:
+                    imgs.append(img)
+                    pres.append(present)
         elif tc == QUERY_EVENT:
             q = ev.get("query", "")
             if q.strip().upper() == "BEGIN":
-                kinds.append("BEGIN")
-                dbs.append(None)
-                pks.append(None)
+                mark("BEGIN")
             else:
-                kinds.append("DDL")
-                dbs.append(ev.get("db"))
-                pks.append(q)
-            tbls.append(None)
-            vals.append(None)
-            xids.append(None)
+                mark("DDL", ev.get("db"), q)
         elif tc == XID_EVENT:
-            kinds.append("COMMIT")
-            dbs.append(None)
-            tbls.append(None)
-            pks.append(None)
-            vals.append(None)
-            xids.append(ev["xid"])
+            mark("COMMIT", xid=ev["xid"])
         elif tc == ROWS_QUERY_EVENT:
-            kinds.append("TRACE")
-            dbs.append(None)
-            tbls.append(None)
-            pks.append(ev["rows_query"])
-            vals.append(None)
-            xids.append(None)
+            mark("TRACE", pk=ev["rows_query"])
         elif tc == GCN_EVENT:
-            kinds.append("GCN")
-            dbs.append(None)
-            tbls.append(None)
-            pks.append(None)
-            vals.append(None)
-            xids.append(ev["gcn"])
+            mark("GCN", xid=ev["gcn"])
         elif tc == INCIDENT_EVENT:
-            kinds.append("INCIDENT")
-            dbs.append(None)
-            tbls.append(None)
-            pks.append(ev.get("incident_message") or "")
-            vals.append(None)
-            xids.append(ev.get("incident_number"))
+            mark("INCIDENT", pk=ev.get("incident_message") or "",
+                 xid=ev.get("incident_number"))
     n_total = len(kinds)
-    return {
+    cols = {
         "file_name": [name] * n_total,
         "pos": list(range(n_total)),
         "kind": kinds,
@@ -3095,134 +3101,21 @@ def wire_frame_cols(name: str, buf: bytes,
         "value": vals,
         "xid": xids,
     }
+    if images:
+        cols["image"] = imgs
+        cols["present"] = pres
+    return cols
 
 
 def wire_frame_rows(name: str, buf: bytes,
                     tolerate_truncation: bool = False,
                     include_values: bool = False) -> list[tuple]:
-    """Decode ONE wire file's bytes (magic optional) into the consumer
-    frame rows — (file_name, pos, kind, db, tbl, pk, value, xid). The
-    SINGLE implementation behind the batch attach (`read_wire_binlog`),
-    the streaming attach (`streaming.source.wire_stream`) AND the
-    registry-typed attach (`decode_wire_with_registry`): ``pos``
-    is the row index within the file counting EVERY surfaced row (rows,
-    BEGIN/COMMIT, DDL, TRACE, GCN, and — since round 8 — INCIDENT
-    markers), so all paths assign identical replication positions and
-    an applier can move between them. Offsets persisted BEFORE incident
-    surfacing remain valid for incident-free files (no in-repo exporter
-    ever emits INCIDENT; the row exists for externally produced
-    streams, where a replica must stop at the gap anyway).
-
-    ``include_values=True`` appends TWO elements to every tuple: [8] the
-    row's full decoded image values (AFTER image for UPDATEs, with
-    type-39 JSON diff vectors materialized; BEFORE image for DELETEs),
-    and [9] the surfaced image's present-column index list when the
-    image is PARTIAL (binlog_row_image=MINIMAL/NOBLOB — absent columns
-    were PADDED to None by the decoder, indistinguishable from real
-    NULLs by value alone) or ``None`` for full images. Both are ``None``
-    on non-row kinds — keeping position assignment and typed decode in
-    ONE implementation so they can never drift. (The value-free form
-    delegates to the columnar walk — zip of its columns — so the hot
-    consumers and this surface share one recipe there too.)"""
-    if not include_values:
-        c = wire_frame_cols(name, buf, tolerate_truncation)
-        return list(zip(c["file_name"], c["pos"], c["kind"], c["db"],
-                        c["tbl"], c["pk"], c["value"], c["xid"]))
-    _ACTION = _FRAME_ACTION
-    if buf[:4] == MAGIC:
-        buf = buf[4:]
-    elif not tolerate_truncation:
-        raise ValueError(f"{name}: not a binlog file (bad magic)")
-    out: list[tuple] = []
-    pos = 0
-    for ev in expand_payload_events(
-        decode_events(buf, tolerate_truncation=tolerate_truncation)
-    ):
-        tc = ev["type"]
-        if tc in _ACTION:
-            for row in ev["rows"]:
-                img = row[1] if tc in UPDATE_EVENTS else row
-                # frame contract is (pk, value); narrower or
-                # differently-typed tables surface what they
-                # have (typed decode uses binlog_to_table)
-                pk_img = img
-                if tc in UPDATE_EVENTS and (not img or img[0] is None):
-                    # MINIMAL after-images omit the unchanged pk — the
-                    # before-image carries it; never render the literal
-                    # string "None" as a key
-                    pk_img = row[0]
-                pk = (
-                    str(pk_img[0])
-                    if pk_img and pk_img[0] is not None
-                    else None
-                )
-                val = img[1] if len(img) > 1 else None
-                rec = (name, pos, _ACTION[tc], ev["db"], ev["tbl"],
-                       pk, val if isinstance(val, float) else None,
-                       None)
-                if include_values:
-                    vals = img
-                    if tc == PARTIAL_UPDATE_ROWS_EVENT:
-                        vals = [
-                            apply_json_diffs(b, v)
-                            if isinstance(v, JsonDiffVector) else v
-                            for b, v in zip(row[0], vals)
-                        ]
-                    present = (
-                        ev.get("present_columns_after")
-                        if tc in UPDATE_EVENTS
-                        else ev.get("present_columns")
-                    )
-                    rec = rec + (list(vals), present)
-                out.append(rec)
-                pos += 1
-        elif tc == QUERY_EVENT:
-            q = ev.get("query", "")
-            if q.strip().upper() == "BEGIN":
-                out.append(
-                    (name, pos, "BEGIN", None, None, None, None, None)
-                )
-            else:
-                # DDL statement travelling as a QUERY event
-                # (QueryEventReformator path): text surfaces
-                # in the pk slot, like TRACE markers
-                out.append(
-                    (name, pos, "DDL", ev.get("db"), None, q,
-                     None, None)
-                )
-            pos += 1
-        elif tc == XID_EVENT:
-            out.append(
-                (name, pos, "COMMIT", None, None, None, None, ev["xid"])
-            )
-            pos += 1
-        elif tc == ROWS_QUERY_EVENT:
-            # trace marker: text surfaces in the pk slot
-            out.append(
-                (name, pos, "TRACE", None, None,
-                 ev["rows_query"], None, None)
-            )
-            pos += 1
-        elif tc == GCN_EVENT:
-            # txn commit-time carrier: gcn surfaces in the xid
-            # column (both are the txn-scope bigint slot)
-            out.append(
-                (name, pos, "GCN", None, None, None, None, ev["gcn"])
-            )
-            pos += 1
-        elif tc == INCIDENT_EVENT:
-            # LOST_EVENTS marker: appliers must see the gap as a typed
-            # row (a real replica stops with ER_SLAVE_INCIDENT) — the
-            # message travels in the pk slot like TRACE markers
-            out.append(
-                (name, pos, "INCIDENT", None, None,
-                 ev.get("incident_message") or "", None,
-                 ev.get("incident_number"))
-            )
-            pos += 1
-    if include_values:
-        return [t if len(t) == 10 else t + (None, None) for t in out]
-    return out
+    """`wire_frame_cols` as row tuples (file_name, pos, kind, db, tbl, pk,
+    value, xid); ``include_values=True`` appends its ``image`` and
+    ``present`` columns as elements [8] and [9]. ``buf`` is a wire file:
+    it must open with the file magic unless ``tolerate_truncation``."""
+    c = wire_frame_cols(name, buf, tolerate_truncation, images=include_values)
+    return list(zip(*c.values()))  # dict order is the frame's column order
 
 
 WIRE_FRAME_SCHEMA = (
@@ -3985,9 +3878,9 @@ def _compile_coercer(field, codec, decl):
 
 
 def binlog_to_table(blobs, mysql_types: list[str], columns: list[str],
-                    payload_col: str = "payload",
                     include_action: bool = False):
-    """Decode typed wire blobs back into a Spark frame with faithful
+    """Decode typed wire blobs (a ``payload`` column of bare event
+    streams) back into a Spark frame with faithful
     types (``types.spark_type_for`` per declaration; DATETIME2 and
     TIMESTAMP2 both surface as TIMESTAMP_NTZ — the wire carries zone-less
     fields / UTC epochs; TIME as MySQL text form).
@@ -3997,7 +3890,8 @@ def binlog_to_table(blobs, mysql_types: list[str], columns: list[str],
     WRITE/UPDATE/DELETE in both v1 and v2 framing — prepending an
     ``action`` column; UPDATE rows surface their AFTER image (the REPLACE
     model — pair the flag with the registry/last-image machinery when the
-    before image matters)."""
+    before image matters). Rows are the ``image`` column of
+    `wire_frame_cols`."""
     from pyspark.sql import types as T
 
     from polardbx_cdc_spark.types import spark_type_for
@@ -4027,37 +3921,13 @@ def binlog_to_table(blobs, mysql_types: list[str], columns: list[str],
         out_cols = (["action"] + columns) if include_action else columns
         for pdf in batches:
             out = []
-            acts = [] if include_action else None
-            for blob in pdf[payload_col]:
-                for ev in expand_payload_events(decode_events(bytes(blob))):
-                    if include_action:
-                        if ev["type"] not in ROWS_EVENTS:
-                            continue
-                        act = {
-                            WRITE_ROWS_EVENT: "INSERT", WRITE_ROWS_EVENT_V1: "INSERT",
-                            UPDATE_ROWS_EVENT: "UPDATE", UPDATE_ROWS_EVENT_V1: "UPDATE",
-                            DELETE_ROWS_EVENT: "DELETE", DELETE_ROWS_EVENT_V1: "DELETE",
-                            PARTIAL_UPDATE_ROWS_EVENT: "UPDATE",
-                        }[ev["type"]]
-                    elif ev["type"] not in (WRITE_ROWS_EVENT, WRITE_ROWS_EVENT_V1):
-                        continue
-                    for row in ev["rows"]:
-                        if include_action and ev["type"] in UPDATE_EVENTS:
-                            before = row[0]
-                            row = row[1]  # after image (REPLACE model)
-                            # partial JSON (type 39): materialize diff
-                            # vectors against the before image — typed
-                            # columns must carry documents, never
-                            # JsonDiff objects
-                            if ev["type"] == PARTIAL_UPDATE_ROWS_EVENT:
-                                row = [
-                                    apply_json_diffs(b, v)
-                                    if isinstance(v, JsonDiffVector) else v
-                                    for b, v in zip(before, row)
-                                ]
-                        out.append(row)
-                        if include_action:
-                            acts.append(act)
+            acts = []
+            for blob in pdf["payload"]:
+                c = wire_frame_cols(None, bytes(blob), images=True)
+                for kind, img in zip(c["kind"], c["image"]):
+                    if kind == "INSERT" or (include_action and img is not None):
+                        acts.append(kind)
+                        out.append(img)
             data: dict = {}
             if include_action:
                 data["action"] = acts
@@ -4106,8 +3976,8 @@ def decode_wire_with_registry(spark, wire_dir: str, registry, db: str, tbl: str,
     machinery first.
 
     Distributed: binaryFile scan + per-file ``mapInPandas`` (positions
-    come from :func:`wire_frame_rows` ``include_values=True`` — the same
-    counter as every other attach). The version timeline is one row per
+    and row images come from :func:`wire_frame_cols` — the same counter
+    as every other attach). The version timeline is one row per
     DDL, shipped to executors as a closure constant the way the
     reference broadcasts its meta snapshot."""
     decode_files, out_schema = _registry_decode_plan(
@@ -4733,19 +4603,21 @@ def _registry_decode_plan(registry, db: str, tbl: str,
             out = []
             for path, content in zip(pdf["path"], pdf["content"]):
                 name = os.path.basename(path)
-                for rec in wire_frame_rows(name, bytes(content),
-                                           include_values=True,
-                                           tolerate_truncation=tolerate_truncation):
-                    kind, edb, etbl, values = rec[2], rec[3], rec[4], rec[8]
+                c = wire_frame_cols(name, bytes(content),
+                                    tolerate_truncation, images=True)
+                for pos, kind, edb, etbl, values, present in zip(
+                    c["pos"], c["kind"], c["db"], c["tbl"], c["image"],
+                    c["present"],
+                ):
                     if values is None or (edb, etbl) != (db, tbl):
                         continue
                     if kind != "INSERT" and not include_action:
                         continue
-                    key = wire_position_key(name, rec[1])
+                    key = wire_position_key(name, pos)
                     ti = bisect.bisect_right(tkeys, key) - 1
                     if ti < 0:
                         raise ValueError(
-                            f"{name} pos {rec[1]}: row event precedes every "
+                            f"{name} pos {pos}: row event precedes every "
                             f"registry version of {db}.{tbl}"
                         )
                     state = tstates[ti]
@@ -4753,7 +4625,7 @@ def _registry_decode_plan(registry, db: str, tbl: str,
                         # an erased previous generation (rows before the
                         # last DROP TABLE) — not part of the current view
                         continue
-                    if rec[9] is not None:
+                    if present is not None:
                         # MINIMAL/NOBLOB image: absent columns were padded
                         # to None by the decoder — materializing them would
                         # emit NULLs indistinguishable from real NULLs.
@@ -4761,8 +4633,8 @@ def _registry_decode_plan(registry, db: str, tbl: str,
                         # partial-image streams with the last-image
                         # machinery first (ADVICE r10).
                         raise ValueError(
-                            f"{name} pos {rec[1]}: PARTIAL row image "
-                            f"(present columns {rec[9]}) reached registry "
+                            f"{name} pos {pos}: PARTIAL row image "
+                            f"(present columns {present}) reached registry "
                             f"decode of {db}.{tbl} — full images required "
                             f"(binlog_row_image=FULL); apply last-image "
                             f"merge before materializing"
@@ -4770,7 +4642,7 @@ def _registry_decode_plan(registry, db: str, tbl: str,
                     width, src, coercers, convs = vplans[state]
                     if len(values) != width:
                         raise ValueError(
-                            f"{name} pos {rec[1]}: wire row width "
+                            f"{name} pos {pos}: wire row width "
                             f"{len(values)} != registry version width "
                             f"{width} for {db}.{tbl} (registry drift)"
                         )

@@ -411,21 +411,34 @@ def consume_from_group(spark, host: str, port: int, group, member_id: str = "c0"
         {"wire": f"{chain[min(idx, len(chain) - 1)]}:{cur_pos:012d}"}, gen
     )
     if spool_dir:
-        seg_n = spool_segments(bytes(blob), spool_dir)
-        if seg_n == 0:
+        decoded = spool_decode(spark, bytes(blob), spool_dir)
+        if decoded is None:
             return spark.createDataFrame(
                 [], "db string, tbl string, action string, pk string, value double"
             )
-        from pyspark.sql import functions as F  # local: module stays server-usable without Spark
+        return decoded
+    payload = spark.createDataFrame([(bytearray(blob),)], "payload binary")
+    return W.binlog_to_events(payload)
 
-        payload = (
-            spark.read.format("binaryFile")
-            .option("pathGlobFilter", "segment_*.bin")
-            .load(spool_dir)
-            .select(F.col("content").alias("payload"))
-        )
-    else:
-        payload = spark.createDataFrame([(bytearray(blob),)], "payload binary")
+
+def spool_decode(spark, blob: bytes, spool_dir: str,
+                 seg_limit: int = 16 << 20):
+    """The distributed decode of a fetched dump blob: land it as segment
+    files under ``spool_dir`` (`spool_segments`), then decode them with a
+    ``binaryFile`` scan through ``binlog_wire.binlog_to_events``. Returns
+    the (db, tbl, action, pk, value) frame, or None when the blob held no
+    events. Reads ``spool_segments`` from the module at call time, so a
+    wrapper installed on the module attribute sees every call."""
+    if spool_segments(blob, spool_dir, seg_limit) == 0:
+        return None
+    from pyspark.sql import functions as F  # local: module stays server-usable without Spark
+
+    payload = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "segment_*.bin")
+        .load(spool_dir)
+        .select(F.col("content").alias("payload"))
+    )
     return W.binlog_to_events(payload)
 
 

@@ -4230,6 +4230,20 @@ def events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+def _cdc_rollup(decoded: DataFrame) -> DataFrame:
+    """The (db, tbl, action) rollup the wire round-trip queries grade
+    against the raw-cdc oracle: row count, integer value cents and the
+    md5-prefix pk hash sum (the cross-engine rules in the module
+    docstring), so pk strings and double value bits must survive."""
+    return decoded.groupBy("db", "tbl", "action").agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum(F.round(F.col("value") * 100, 0).cast("long")).cast("long").alias("value_cents"),
+        F.sum(F.conv(F.substring(F.md5("pk"), 1, 8), 16, 10).cast("long"))
+        .cast("long")
+        .alias("pk_hash_sum"),
+    )
+
+
 @register(
     "cdc_binlog_wire_roundtrip",
     oracle_cdc_query(
@@ -4264,13 +4278,7 @@ def cdc_binlog_wire_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     cdc = binlog_wire.fan_out(cdc)
     blobs = binlog_wire.events_to_binlog(cdc)
     decoded = binlog_wire.binlog_to_events(blobs)
-    return decoded.groupBy("db", "tbl", "action").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.round(F.col("value") * 100, 0).cast("long")).cast("long").alias("value_cents"),
-        F.sum(F.conv(F.substring(F.md5("pk"), 1, 8), 16, 10).cast("long"))
-        .cast("long")
-        .alias("pk_hash_sum"),
-    )
+    return _cdc_rollup(decoded)
 
 
 @register(
@@ -4310,13 +4318,7 @@ def cdc_binlog_wire_compressed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     wrapped = blobs.select(_wrap("payload").alias("payload"))
     decoded = binlog_wire.binlog_to_events(wrapped)
-    return decoded.groupBy("db", "tbl", "action").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.round(F.col("value") * 100, 0).cast("long")).cast("long").alias("value_cents"),
-        F.sum(F.conv(F.substring(F.md5("pk"), 1, 8), 16, 10).cast("long"))
-        .cast("long")
-        .alias("pk_hash_sum"),
-    )
+    return _cdc_rollup(decoded)
 
 
 @register(
@@ -4360,13 +4362,7 @@ def cdc_binlog_wire_zstd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     wrapped = blobs.select(_wrap("payload").alias("payload"))
     decoded = binlog_wire.binlog_to_events(wrapped)
-    return decoded.groupBy("db", "tbl", "action").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.round(F.col("value") * 100, 0).cast("long")).cast("long").alias("value_cents"),
-        F.sum(F.conv(F.substring(F.md5("pk"), 1, 8), 16, 10).cast("long"))
-        .cast("long")
-        .alias("pk_hash_sum"),
-    )
+    return _cdc_rollup(decoded)
 
 
 
@@ -7530,7 +7526,7 @@ def cdc_wire_stream_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-identity pytest-proven by the Binlog-X capstone), then a
     Structured Streaming `wire_stream` attach (Trigger.AvailableNow)
     tails the directory, decodes every file executor-side through
-    `wire_frame_rows`, and lands the frames in a parquet sink; the
+    `wire_frame_cols`, and lands the frames in a parquet sink; the
     decoded DML rows aggregate back to the raw-cdc oracle. Grades what
     the pytest capstones exercise: the reference's BinlogExtractor
     file-tail attach (BinlogExtractor.java:161-236) re-expressed as a
@@ -7557,15 +7553,10 @@ def cdc_wire_stream_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.stop()
             raise RuntimeError("wire_stream availableNow pass exceeded 600s")
         rows = (
-            spark.read.parquet(out)
-            .filter(F.col("kind").isin("INSERT", "UPDATE", "DELETE"))
-            .groupBy("db", "tbl", F.col("kind").alias("action"))
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum(F.round(F.col("value") * 100, 0).cast("long"))
-                .cast("long").alias("value_cents"),
-                F.sum(F.conv(F.substring(F.md5("pk"), 1, 8), 16, 10).cast("long"))
-                .cast("long").alias("pk_hash_sum"),
+            _cdc_rollup(
+                spark.read.parquet(out)
+                .filter(F.col("kind").isin("INSERT", "UPDATE", "DELETE"))
+                .withColumnRenamed("kind", "action")
             )
             .collect()  # bounded: ≤ |db|×|tbl|×|action| = 45 rollup rows
         )
@@ -7661,7 +7652,6 @@ def cdc_dump_attach_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from polardbx_cdc_spark import binlog_wire
     from polardbx_cdc_spark import dump_server as DS
     from polardbx_cdc_spark import mysql_dump as MD
 
@@ -7678,27 +7668,11 @@ def cdc_dump_attach_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 1 MB segments: the sf0.1 chain (~10 MB) fans the decode across
         # ~10 executors instead of 3; at 100 TB the spool would live on
         # shared storage and the limit would rise toward row-group size
-        n_seg = DS.spool_segments(blob, spool, seg_limit=1 << 20)
-        if n_seg == 0:
+        decoded = DS.spool_decode(spark, blob, spool, seg_limit=1 << 20)
+        if decoded is None:
             raise RuntimeError("dump attach fetched no events")
-        payload = (
-            spark.read.format("binaryFile")
-            .option("pathGlobFilter", "segment_*.bin")
-            .load(spool)
-            .select(F.col("content").alias("payload"))
-        )
-        rows = (
-            binlog_wire.binlog_to_events(payload)
-            .groupBy("db", "tbl", "action")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum(F.round(F.col("value") * 100, 0).cast("long"))
-                .cast("long").alias("value_cents"),
-                F.sum(F.conv(F.substring(F.md5("pk"), 1, 8), 16, 10).cast("long"))
-                .cast("long").alias("pk_hash_sum"),
-            )
-            .collect()  # bounded: ≤ |db|×|tbl|×|action| = 45 rollup rows
-        )
+        # bounded: ≤ |db|×|tbl|×|action| = 45 rollup rows
+        rows = _cdc_rollup(decoded).collect()
     finally:
         shutil.rmtree(work, ignore_errors=True)
     return spark.createDataFrame(
@@ -7739,7 +7713,6 @@ def cdc_dump_none_checksum_decode(spark: SparkSession, sf_dir: str) -> DataFrame
     import shutil
     import tempfile
 
-    from polardbx_cdc_spark import binlog_wire
     from polardbx_cdc_spark import dump_server as DS
     from polardbx_cdc_spark import mysql_dump as MD
 
@@ -7750,27 +7723,11 @@ def cdc_dump_none_checksum_decode(spark: SparkSession, sf_dir: str) -> DataFrame
             host, port = srv.address
             blob = MD.binlog_dump_fetch(host, port, "", 4)
         spool = os.path.join(work, "spool")
-        n_seg = DS.spool_segments(blob, spool, seg_limit=1 << 20)
-        if n_seg == 0:
+        decoded = DS.spool_decode(spark, blob, spool, seg_limit=1 << 20)
+        if decoded is None:
             raise RuntimeError("NONE-checksum dump fetched no events")
-        payload = (
-            spark.read.format("binaryFile")
-            .option("pathGlobFilter", "segment_*.bin")
-            .load(spool)
-            .select(F.col("content").alias("payload"))
-        )
-        rows = (
-            binlog_wire.binlog_to_events(payload)
-            .groupBy("db", "tbl", "action")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum(F.round(F.col("value") * 100, 0).cast("long"))
-                .cast("long").alias("value_cents"),
-                F.sum(F.conv(F.substring(F.md5("pk"), 1, 8), 16, 10).cast("long"))
-                .cast("long").alias("pk_hash_sum"),
-            )
-            .collect()  # bounded: ≤ |db|×|tbl|×|action| = 45 rollup rows
-        )
+        # bounded: ≤ |db|×|tbl|×|action| = 45 rollup rows
+        rows = _cdc_rollup(decoded).collect()
     finally:
         shutil.rmtree(work, ignore_errors=True)
     return spark.createDataFrame(
@@ -7928,15 +7885,10 @@ def cdc_wire_stream_x_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.stop()
             raise RuntimeError("Binlog-X wire_stream pass exceeded 600s")
         rows = (
-            spark.read.parquet(out)
-            .filter(F.col("kind").isin("INSERT", "UPDATE", "DELETE"))
-            .groupBy("db", "tbl", F.col("kind").alias("action"))
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum(F.round(F.col("value") * 100, 0).cast("long"))
-                .cast("long").alias("value_cents"),
-                F.sum(F.conv(F.substring(F.md5("pk"), 1, 8), 16, 10).cast("long"))
-                .cast("long").alias("pk_hash_sum"),
+            _cdc_rollup(
+                spark.read.parquet(out)
+                .filter(F.col("kind").isin("INSERT", "UPDATE", "DELETE"))
+                .withColumnRenamed("kind", "action")
             )
             .collect()  # bounded: ≤ |db|×|tbl|×|action| = 45 rollup rows
         )

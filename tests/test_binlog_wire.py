@@ -1733,7 +1733,7 @@ def test_decode_wire_with_registry_hides_implicit_pk(spark, tmp_path):
 
 def test_decode_wire_with_registry_payload_compressed(spark, tmp_path):
     """Evolution decode over TRANSACTION_PAYLOAD-framed files: payload
-    expansion happens inside wire_frame_rows, so position assignment —
+    expansion happens inside wire_frame_cols, so position assignment —
     and therefore version resolution — is identical to the uncompressed
     stream."""
     import os
@@ -2441,7 +2441,7 @@ def test_retype_converter_unsupported_target_raises_at_plan():
 def test_decode_wire_with_registry_rejects_partial_images(spark, tmp_path):
     """MINIMAL/NOBLOB partial images pad absent columns to NULL — the
     registry decode must REFUSE them (ADVICE r10) instead of emitting
-    NULLs indistinguishable from real NULLs. wire_frame_rows surfaces
+    NULLs indistinguishable from real NULLs. wire_frame_cols surfaces
     the present-column info alongside the values for this check."""
     import os
 
@@ -3044,51 +3044,204 @@ def test_export_wire_files_vectorized_byte_identical(spark, tmp_path):
     assert new_x and new_x == old_x
 
 
-def test_wire_frame_cols_matches_rows():
-    """The columnar frame walk (wire_frame_cols, r14 optimization behind
-    the batch + streaming attach) assigns positions and surfaces
-    pk/value/xid identically to the independent include_values row walk
-    across EVERY surfaced kind — rows (INSERT / UPDATE incl. the MINIMAL
-    pk fallback / DELETE, null pks, non-float values), BEGIN/COMMIT,
-    DDL, TRACE, GCN, INCIDENT, and TRANSACTION_PAYLOAD-compressed
-    frames."""
+def _golden_chain() -> bytes:
+    """One bare event stream covering every frame kind: BEGIN, DDL,
+    TRACE, GCN, INCIDENT and COMMIT markers; v1 and v2
+    INSERT/UPDATE/DELETE; a type-39 update; MINIMAL and NOBLOB images;
+    a TRANSACTION_PAYLOAD."""
     import struct
 
-    td = W.TableDef.from_mysql_types("shop", "t", ["bigint", "double"])
-    ev = [
+    t = W.TableDef.from_mysql_types(
+        "shop", "t", ["varchar(64)", "double", "json"])
+    T, F = True, False
+    diff = W.JsonDiffVector([W.JsonDiff(W.JSON_DIFF_REPLACE, "$.k", 3)])
+    return b"".join([
+        W.encode_fde(),
+        W.encode_gcn(1234567),
         W.encode_query("shop", "BEGIN"),
-        W.encode_table_map(9, td),
-        W.encode_rows_event(W.WRITE_ROWS_EVENT, 9, td,
-                            [[1, 1.5], [None, 2.5], [3, None]]),
-        W.encode_rows_event(W.UPDATE_ROWS_EVENT, 9, td,
-                            [([1, 1.5], [1, 9.5])]),
-        W.encode_rows_event(W.UPDATE_ROWS_EVENT, 9, td,
-                            [([2, 1.0], [None, 8.0])],
-                            present_after=[False, True]),
-        W.encode_rows_event(W.DELETE_ROWS_EVENT, 9, td, [[3, None]]),
-        W.encode_rows_query("::TRACE::abc"),
+        W.encode_rows_query("::TRACE::t1"),
+        W.encode_table_map(9, t),
+        W.encode_rows_event(W.WRITE_ROWS_EVENT, 9, t, [
+            ["a", 1.5, {"k": 1}], [None, 2.5, None], ["c", None, [1, 2]]]),
+        W.encode_rows_event(W.UPDATE_ROWS_EVENT, 9, t, [
+            (["a", 1.5, {"k": 1}], ["a", 9.5, {"k": 2, "s": "x"}])]),
+        # MINIMAL update: before image pk-only, after image changed-only
+        W.encode_rows_event(W.UPDATE_ROWS_EVENT, 9, t, [
+            (["b", None, None], [None, 8.0, None])],
+            present=[T, F, F], present_after=[F, T, F]),
+        W.encode_rows_event(W.PARTIAL_UPDATE_ROWS_EVENT, 9, t, [
+            (["a", 9.5, {"k": 2, "s": "x"}], ["a", 10.5, diff])]),
+        # NOBLOB insert: the JSON column is not in the image
+        W.encode_rows_event(W.WRITE_ROWS_EVENT, 9, t, [["d", 4.0, None]],
+                            present=[T, T, F]),
+        # MINIMAL delete: pk-only image
+        W.encode_rows_event(W.DELETE_ROWS_EVENT, 9, t, [["c", None, None]],
+                            present=[T, F, F]),
+        W.encode_rows_event(W.DELETE_ROWS_EVENT, 9, t, [["d", 4.0, None]]),
         W.encode_xid(77),
-        W.encode_gcn(123456),
+        W.encode_query("shop", "ALTER TABLE t ADD COLUMN x INT"),
         W.encode_event(W.INCIDENT_EVENT,
                        struct.pack("<H", 1) + bytes([4]) + b"gone", 0),
-        W.encode_query("shop", "ALTER TABLE t ADD COLUMN x INT"),
+        W.encode_table_map(9, t),
+        W.encode_rows_event(W.WRITE_ROWS_EVENT_V1, 9, t,
+                            [["e", 5.5, {"v": 1}]]),
+        W.encode_rows_event(W.UPDATE_ROWS_EVENT_V1, 9, t, [
+            (["e", 5.5, {"v": 1}], ["e", 6.5, {"v": 2}])]),
+        W.encode_rows_event(W.DELETE_ROWS_EVENT_V1, 9, t,
+                            [["e", 6.5, {"v": 2}]]),
         W.encode_transaction_payload([
-            W.encode_table_map(9, td),
-            W.encode_rows_event(W.WRITE_ROWS_EVENT, 9, td, [[5, 5.5]]),
+            W.encode_query("shop", "BEGIN"),
+            W.encode_table_map(9, t),
+            W.encode_rows_event(W.WRITE_ROWS_EVENT, 9, t, [["f", 7.25, True]]),
+            W.encode_xid(78),
         ]),
+    ])
+
+
+_F = "binlog.000001"
+#: wire_frame_rows(include_values=True) of MAGIC + _golden_chain(); the
+#: first 8 elements are also wire_frame_cols' columns, row by row
+_GOLDEN_FRAME = [
+    (_F, 0, "GCN", None, None, None, None, 1234567, None, None),
+    (_F, 1, "BEGIN", None, None, None, None, None, None, None),
+    (_F, 2, "TRACE", None, None, "::TRACE::t1", None, None, None, None),
+    (_F, 3, "INSERT", "shop", "t", "a", 1.5, None, ["a", 1.5, {"k": 1}], None),
+    (_F, 4, "INSERT", "shop", "t", None, 2.5, None, [None, 2.5, None], None),
+    (_F, 5, "INSERT", "shop", "t", "c", None, None, ["c", None, [1, 2]], None),
+    (_F, 6, "UPDATE", "shop", "t", "a", 9.5, None,
+     ["a", 9.5, {"k": 2, "s": "x"}], None),
+    (_F, 7, "UPDATE", "shop", "t", "b", 8.0, None, [None, 8.0, None], [1]),
+    (_F, 8, "UPDATE", "shop", "t", "a", 10.5, None,
+     ["a", 10.5, {"k": 3, "s": "x"}], None),
+    (_F, 9, "INSERT", "shop", "t", "d", 4.0, None, ["d", 4.0, None], [0, 1]),
+    (_F, 10, "DELETE", "shop", "t", "c", None, None, ["c", None, None], [0]),
+    (_F, 11, "DELETE", "shop", "t", "d", 4.0, None, ["d", 4.0, None], None),
+    (_F, 12, "COMMIT", None, None, None, None, 77, None, None),
+    (_F, 13, "DDL", "shop", None, "ALTER TABLE t ADD COLUMN x INT", None,
+     None, None, None),
+    (_F, 14, "INCIDENT", None, None, "gone", None, 1, None, None),
+    (_F, 15, "INSERT", "shop", "t", "e", 5.5, None, ["e", 5.5, {"v": 1}], None),
+    (_F, 16, "UPDATE", "shop", "t", "e", 6.5, None, ["e", 6.5, {"v": 2}], None),
+    (_F, 17, "DELETE", "shop", "t", "e", 6.5, None, ["e", 6.5, {"v": 2}], None),
+    (_F, 18, "BEGIN", None, None, None, None, None, None, None),
+    (_F, 19, "INSERT", "shop", "t", "f", 7.25, None, ["f", 7.25, True], None),
+    (_F, 20, "COMMIT", None, None, None, None, 78, None, None),
+]
+_FRAME_COLS = ["file_name", "pos", "kind", "db", "tbl", "pk", "value", "xid",
+               "image", "present"]
+
+
+class _MapCapture:
+    """Stands in for a DataFrame: returns the ``mapInPandas`` function, so
+    a partition function runs in-process on hand-built batches."""
+
+    def mapInPandas(self, fn, schema):
+        return fn
+
+
+def test_frame_walk_golden_outputs(spark):
+    """The frame walk and its projections over one chain holding every
+    surfaced kind (`_golden_chain`): `wire_frame_cols`,
+    `wire_frame_rows(include_values=True)`, `binlog_to_events` and
+    `binlog_to_table(include_action=True)` return exactly these literals,
+    which are what the four entry points returned when each still had a
+    walk of its own — with ONE change, pinned below: `binlog_to_events`
+    now takes a MINIMAL update's pk from the before image like the frame
+    does (it surfaced None)."""
+    chain = _golden_chain()
+    wire = W.MAGIC + chain
+    assert W.wire_frame_rows(_F, wire, include_values=True) == _GOLDEN_FRAME
+    assert W.wire_frame_rows(_F, wire) == [r[:8] for r in _GOLDEN_FRAME]
+    cols = W.wire_frame_cols(_F, wire, images=True)
+    assert list(cols) == _FRAME_COLS
+    assert cols == {k: list(v) for k, v in zip(_FRAME_COLS, zip(*_GOLDEN_FRAME))}
+    # a bare stream (no magic) walks the same; a named file needs the magic
+    bare = W.wire_frame_cols(None, chain)
+    assert bare["kind"] == cols["kind"] and bare["pk"] == cols["pk"]
+    assert bare["file_name"] == [None] * len(_GOLDEN_FRAME)
+    with pytest.raises(ValueError, match="bad magic"):
+        W.wire_frame_cols(_F, chain)
+
+    blobs = spark.createDataFrame([(bytearray(chain),)], "payload binary")
+    events = [tuple(r) for r in W.binlog_to_events(blobs).collect()]
+    assert events == [
+        ("shop", "t", "INSERT", "a", 1.5),
+        ("shop", "t", "INSERT", None, 2.5),
+        ("shop", "t", "INSERT", "c", None),
+        ("shop", "t", "UPDATE", "a", 9.5),
+        ("shop", "t", "UPDATE", "b", 8.0),  # MINIMAL: was None
+        ("shop", "t", "UPDATE", "a", 10.5),
+        ("shop", "t", "INSERT", "d", 4.0),
+        ("shop", "t", "DELETE", "c", None),
+        ("shop", "t", "DELETE", "d", 4.0),
+        ("shop", "t", "INSERT", "e", 5.5),
+        ("shop", "t", "UPDATE", "e", 6.5),
+        ("shop", "t", "DELETE", "e", 6.5),
+        ("shop", "t", "INSERT", "f", 7.25),
     ]
-    blob = W.MAGIC + b"".join(ev)
-    cols = W.wire_frame_cols("binlog.000001", blob)
-    order = ["file_name", "pos", "kind", "db", "tbl", "pk", "value", "xid"]
-    as_rows = list(zip(*[cols[k] for k in order]))
-    ref = [t[:8] for t in W.wire_frame_rows("binlog.000001", blob,
-                                            include_values=True)]
-    assert as_rows == ref
-    # the value-free rows surface delegates to the columnar walk
-    assert W.wire_frame_rows("binlog.000001", blob) == as_rows
-    for k in ("INSERT", "UPDATE", "DELETE", "BEGIN", "COMMIT", "DDL",
-              "TRACE", "GCN", "INCIDENT"):
-        assert k in cols["kind"]
+    decls, names = ["varchar(64)", "double", "json"], ["pk", "value", "doc"]
+    typed = W.binlog_to_table(blobs, decls, names, include_action=True)
+    assert [tuple(r) for r in typed.collect()] == [
+        ("INSERT", "a", 1.5, '{"k":1}'),
+        ("INSERT", None, 2.5, None),
+        ("INSERT", "c", None, "[1,2]"),
+        ("UPDATE", "a", 9.5, '{"k":2,"s":"x"}'),
+        ("UPDATE", None, 8.0, None),
+        ("UPDATE", "a", 10.5, '{"k":3,"s":"x"}'),
+        ("INSERT", "d", 4.0, None),
+        ("DELETE", "c", None, None),
+        ("DELETE", "d", 4.0, None),
+        ("INSERT", "e", 5.5, '{"v":1}'),
+        ("UPDATE", "e", 6.5, '{"v":2}'),
+        ("DELETE", "e", 6.5, '{"v":2}'),
+        ("INSERT", "f", 7.25, "true"),
+    ]
+    inserts = W.binlog_to_table(blobs, decls, names).collect()
+    assert [tuple(r) for r in inserts] == [
+        ("a", 1.5, '{"k":1}'), (None, 2.5, None), ("c", None, "[1,2]"),
+        ("d", 4.0, None), ("e", 5.5, '{"v":1}'), ("f", 7.25, "true"),
+    ]
+
+
+def test_frame_value_is_a_double_column_one():
+    """`value` is column 1 of the surfaced image when that is a double —
+    for a type-39 update, of the image with its diffs materialized. The
+    walks disagreed here: the frame read the raw diff vector (None for
+    every diff), `binlog_to_events` kept any numeric column 1 as a float
+    (7 → 7.0). One rule now: p → 2.5 (frame was None), q and the bigint
+    row x → None (`binlog_to_events` was 7.0); r and s are unchanged.
+    Every in-repo caller of `binlog_to_events` decodes `CDC_TABLE_TYPES`
+    chains, whose column 1 is a double."""
+    import pandas as pd
+
+    j = W.TableDef.from_mysql_types("shop", "j", ["varchar(64)", "json"])
+    i = W.TableDef.from_mysql_types("shop", "i", ["varchar(64)", "bigint"])
+
+    def root(v):
+        return W.JsonDiffVector([W.JsonDiff(W.JSON_DIFF_REPLACE, "$", v)])
+
+    chain = b"".join([
+        W.encode_fde(),
+        W.encode_table_map(11, j),
+        W.encode_rows_event(W.PARTIAL_UPDATE_ROWS_EVENT, 11, j, [
+            (["p", 1.5], ["p", root(2.5)]),
+            (["q", 1.5], ["q", root(7)]),
+            (["r", {"a": 1}], ["r", W.JsonDiffVector(
+                [W.JsonDiff(W.JSON_DIFF_REPLACE, "$.a", 2)])]),
+            (["s", 1.5], ["s", 3.5]),
+        ]),
+        W.encode_table_map(12, i),
+        W.encode_rows_event(W.WRITE_ROWS_EVENT, 12, i, [["x", 7]]),
+    ])
+    cols = W.wire_frame_cols(_F, W.MAGIC + chain, images=True)
+    assert cols["value"] == [2.5, None, None, 3.5, None]
+    assert cols["image"] == [["p", 2.5], ["q", 7], ["r", {"a": 2}], ["s", 3.5],
+                             ["x", 7]]
+    decode = W.binlog_to_events(_MapCapture())
+    out = pd.concat(decode(iter([pd.DataFrame({"payload": [chain]})])))
+    assert out["pk"].tolist() == ["p", "q", "r", "s", "x"]
+    assert out["value"].tolist()[0] == 2.5 and out["value"].tolist()[3] == 3.5
+    assert out["value"].isna().tolist() == [False, True, True, False, True]
 
 
 # ---------------------------------------------------------------------------

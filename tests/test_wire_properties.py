@@ -655,3 +655,106 @@ def test_decode_events_tolerates_garbage_fde_alg_at_torn_tail():
     assert any(e["type"] == W.XID_EVENT and e["xid"] == 3 for e in evs)
     with pytest.raises(ValueError, match="unsupported FDE checksum_alg"):
         W.decode_events(torn, verify_crc=True)
+
+
+# --- hostile frames: torn, bit-flipped and inflated-length wire files -------
+# strict decode may only succeed on an untouched prefix that ends on an
+# event boundary, and must otherwise raise ValueError; tolerant decode
+# stops cleanly at a tear and may raise only ValueError elsewhere.
+
+
+def _crc_chain() -> bytes:
+    """A 40-transaction CRC32 wire file: per transaction a GCN, BEGIN,
+    TABLE_MAP, an INSERT, UPDATE and DELETE, and the XID; every 8th
+    transaction travels compressed in a TRANSACTION_PAYLOAD."""
+    td = W.TableDef.from_mysql_types("shop", "t", ["varchar(64)", "double"])
+    evs = [W.encode_fde()]
+    for i in range(40):
+        k = f"k{i}"
+        txn = [
+            W.encode_query("shop", "BEGIN"),
+            W.encode_table_map(7, td),
+            W.encode_rows_event(W.WRITE_ROWS_EVENT, 7, td, [[k, i + 0.5]]),
+            W.encode_rows_event(W.UPDATE_ROWS_EVENT, 7, td,
+                                [([k, i + 0.5], [k, i + 1.5])]),
+            W.encode_rows_event(W.DELETE_ROWS_EVENT, 7, td, [[k, i + 1.5]]),
+            W.encode_xid(i),
+        ]
+        evs.append(W.encode_gcn(1000 + i))
+        evs += [W.encode_transaction_payload(txn)] if i % 8 == 7 else txn
+    return W.MAGIC + b"".join(evs)
+
+
+_CHAIN = _crc_chain()
+_EVENT_OFFSETS = []
+_off = 4
+while _off < len(_CHAIN):
+    _EVENT_OFFSETS.append(_off)
+    _off += int.from_bytes(_CHAIN[_off + 9:_off + 13], "little")
+#: byte lengths at which a prefix of _CHAIN ends on an event boundary
+_BOUNDARIES = frozenset(_EVENT_OFFSETS + [len(_CHAIN)])
+_FULL = W.wire_frame_cols("binlog.000001", _CHAIN)
+
+
+@st.composite
+def _hostile(draw):
+    buf = bytearray(_CHAIN)
+    kind = draw(st.sampled_from(["truncate", "flip", "inflate"]))
+    if kind == "truncate":
+        return kind, bytes(buf[:draw(st.integers(0, len(buf) - 1))])
+    if kind == "flip":
+        for _ in range(draw(st.integers(1, 3))):
+            i = draw(st.integers(0, len(buf) - 1))
+            buf[i] ^= 1 << draw(st.integers(0, 7))
+        return kind, bytes(buf)
+    off = draw(st.sampled_from(_EVENT_OFFSETS))
+    elen = int.from_bytes(buf[off + 9:off + 13], "little")
+    buf[off + 9:off + 13] = draw(st.integers(elen + 1, 0xFFFFFFFF)).to_bytes(
+        4, "little")
+    return kind, bytes(buf)
+
+
+def _clean_or_value_error(fn) -> bool:
+    """True when ``fn`` returns, False when it raises ValueError; any other
+    exception fails the test."""
+    try:
+        fn()
+    except ValueError:
+        return False
+    return True
+
+
+@given(_hostile())
+@settings(max_examples=300, deadline=2000, derandomize=True)
+def test_hostile_wire_frames_raise_only_value_error(case):
+    """Truncations, bit flips and inflated event_size fields over a
+    CRC32 chain, through `wire_frame_cols` (strict and tolerant) and
+    `binlog_to_events`' partition function (strict, bare stream)."""
+    import pandas as pd
+
+    kind, buf = case
+    name = "binlog.000001"
+    clean_file = buf == _CHAIN[:len(buf)] and len(buf) in _BOUNDARIES
+    assert _clean_or_value_error(
+        lambda: W.wire_frame_cols(name, buf)) == clean_file
+
+    if kind == "truncate":
+        # a torn tail stops cleanly at the last whole event
+        tol = W.wire_frame_cols(name, buf, tolerate_truncation=True)
+        n = len(tol["kind"])
+        assert all(tol[k] == _FULL[k][:n] for k in _FULL)
+    else:
+        _clean_or_value_error(
+            lambda: W.wire_frame_cols(name, buf, tolerate_truncation=True))
+
+    class _Capture:
+        def mapInPandas(self, fn, schema):
+            return fn
+
+    bare = buf[4:]
+    clean_bare = (_CHAIN[4:].startswith(bare)
+                  and len(bare) + 4 in _BOUNDARIES)
+    decode = W.binlog_to_events(_Capture())
+    batch = pd.DataFrame({"payload": [bare]})
+    assert _clean_or_value_error(
+        lambda: list(decode(iter([batch])))) == clean_bare
