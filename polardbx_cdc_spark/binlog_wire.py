@@ -1688,7 +1688,20 @@ def decode_events(buf: bytes, verify_crc: bool = True,
     trailer per FOLLOWING event; alg=NONE/OFF (a ``binlog_checksum=NONE``
     master — e.g. a NONE-negotiated MySQLDumpServer stream) means the
     following events carry no trailer at all. Pre-5.6.1 FDEs (per their
-    server_version field) have no alg byte and imply no checksums."""
+    server_version field) have no alg byte and imply no checksums.
+
+    A frame that is in bounds but malformed (a body shorter than its
+    fields, an unknown table id) raises ValueError too, in both modes:
+    the only error a hostile stream produces is ValueError."""
+    try:
+        return _decode_frames(buf, verify_crc, tolerate_truncation)
+    except (IndexError, KeyError, struct.error) as exc:
+        raise ValueError(f"malformed event: {exc!r}") from exc
+
+
+def _decode_frames(buf: bytes, verify_crc: bool,
+                   tolerate_truncation: bool) -> list[dict]:
+    """`decode_events`' frame loop."""
     events: list[dict] = []
     tables: dict[int, TableDef] = {}
     pos = 0
@@ -2472,7 +2485,9 @@ def binlog_to_events(df):
     frame (db, tbl, action, pk, value) — the attach path a binlog
     consumer runs, as a distributed scan (one decode per blob,
     Arrow-batched). The rows are the row kinds of `wire_frame_cols`,
-    their kind as the action."""
+    their kind as the action; ``value`` is column 1 of the surfaced image
+    cast to double (an integer, decimal or numeric-text column 1 casts,
+    any other raises)."""
     return df.mapInPandas(
         _decode_event_blobs,
         "db string, tbl string, action string, pk string, value double",
@@ -2481,7 +2496,8 @@ def binlog_to_events(df):
 
 def _decode_event_blobs(batches):
     """`binlog_to_events`' ``mapInPandas`` body: a projection of the frame
-    walk onto its row kinds, one output batch per input batch."""
+    walk onto its row kinds, one output batch per input batch. Column 1
+    goes out as decoded; Arrow casts it to the double column."""
     import pandas as pd
 
     for pdf in batches:
@@ -2491,7 +2507,7 @@ def _decode_event_blobs(batches):
         pks: list = []
         vals: list = []
         for blob in pdf["payload"]:
-            c = wire_frame_cols(None, bytes(blob))
+            c = _frame_walk(None, bytes(blob), False, False)
             dbs += c["db"]
             tbls += c["tbl"]
             acts += c["kind"]
@@ -2976,43 +2992,62 @@ def _export_chains(spark, sink_dir: str, wire_dir: str, chain: str | None,
 def wire_frame_cols(name: str | None, buf: bytes,
                     tolerate_truncation: bool = False,
                     images: bool = False) -> dict[str, list]:
-    """THE frame walk: the one place that classifies decoded events into
-    consumer rows. One wire file's bytes become a dict of 8 equal-length
-    column lists (file_name, pos, kind, db, tbl, pk, value, xid). The
-    batch, streaming, registry-typed and blob attaches
+    """The consumer frame of one wire file's bytes: a dict of 8
+    equal-length column lists (file_name, pos, kind, db, tbl, pk, value,
+    xid). The batch, streaming, registry-typed and blob attaches
     (`read_wire_binlog`, `streaming.source.wire_stream`,
     `decode_wire_with_registry`, `binlog_to_events`, `binlog_to_table`)
-    are projections of these columns, so every path assigns identical
-    replication positions and an applier can move between them.
+    are projections of the one walk behind it, `_frame_walk`, so every
+    path assigns identical replication positions and an applier can move
+    between them.
 
     ``pos`` is the row index within the file counting EVERY surfaced row:
     - one row per image of a ROWS event (v1, v2 and type 39), kind
       INSERT/UPDATE/DELETE. The surfaced image is the AFTER image of an
-      UPDATE, with type-39 JSON diff vectors materialized against the
-      before image, and the row image otherwise. ``pk`` is its column 0
-      as text (a MINIMAL after image omits the unchanged key; the before
-      image supplies it), ``value`` its column 1 when that is a double,
-      else None — narrower or differently-typed tables surface what they
-      have (typed decode reads ``image``).
+      UPDATE and the row image otherwise. ``pk`` is its column 0 as text
+      (a MINIMAL after image omits the unchanged key; the before image
+      supplies it), ``value`` its column 1 when that is a double, else
+      None — narrower or differently-typed tables surface what they have
+      (typed decode reads ``image``). A type-39 JSON diff in column 1 is
+      materialized against the before image for ``value`` when the
+      before image holds that column (a MINIMAL before image does not:
+      None).
     - BEGIN; DDL (a QUERY event: db, statement text in the pk slot);
       COMMIT (xid); TRACE (ROWS_QUERY text in the pk slot); GCN (gcn in
       the xid slot); INCIDENT (message in the pk slot, number in the xid
       slot — a replica must see the gap as a typed row).
-
-    Columns are built directly, with no per-row tuple and no pandas
-    row→column transpose; the loop appends per row, because exported
-    chains carry about one row per ROWS event, where a per-event
-    comprehension costs more than it saves.
 
     ``name=None`` reads a bare event stream with no file magic (a spool
     segment, an ``events_to_binlog`` blob); a named file must open with
     the magic unless ``tolerate_truncation``, which also stops cleanly at
     a torn tail (a tailed relay file) instead of raising. ``images=True``
     adds two columns: ``image``, the surfaced image's full value list
-    (columns absent from a partial image padded to None), and
-    ``present``, the surfaced image's present-column index list for a
-    binlog_row_image=MINIMAL/NOBLOB image or None for a full one. Both
+    (columns absent from a partial image padded to None; every type-39
+    diff vector materialized against the before image, which raises
+    ValueError when a partial before image lacks the diffed document),
+    and ``present``, the surfaced image's present-column index list for
+    a binlog_row_image=MINIMAL/NOBLOB image or None for a full one. Both
     are None on non-row kinds."""
+    cols = _frame_walk(name, buf, tolerate_truncation, images)
+    cols["value"] = [v if v.__class__ is float else None
+                     for v in cols["value"]]
+    return cols
+
+
+def _frame_walk(name: str | None, buf: bytes, tolerate_truncation: bool,
+                images: bool) -> dict[str, list]:
+    """THE frame walk: the one place that classifies decoded events into
+    consumer rows, the columns of `wire_frame_cols` except that
+    ``value`` holds column 1 of the surfaced image as decoded (without
+    ``images``, a type-39 diff there becomes the materialized document
+    when that is a number, else None). `wire_frame_cols` keeps the
+    doubles; `binlog_to_events` hands the column to Arrow's cast to
+    double.
+
+    Columns are built directly, with no per-row tuple and no pandas
+    row→column transpose; the loop appends per row, because exported
+    chains carry about one row per ROWS event, where a per-event
+    comprehension costs more than it saves."""
     if name is not None:
         if buf[:4] == MAGIC:
             buf = buf[4:]
@@ -3046,31 +3081,40 @@ def wire_frame_cols(name: str | None, buf: bytes,
         if kind is not None:
             db, tbl = ev["db"], ev["tbl"]
             update = tc in UPDATE_EVENTS
+            partial = tc == PARTIAL_UPDATE_ROWS_EVENT
             present = ev.get("present_columns_after" if update
                              else "present_columns")
+            if partial and not images:
+                held = ev.get("present_columns")
+                holds_v = held is None or 1 in held
             for row in ev["rows"]:
                 if update:
                     before, img = row
-                    if tc == PARTIAL_UPDATE_ROWS_EVENT:
-                        img = [
-                            apply_json_diffs(b, a)
-                            if isinstance(a, JsonDiffVector) else a
-                            for b, a in zip(before, img)
-                        ]
                     # MINIMAL after images omit the unchanged key: the
                     # before image carries it
                     pk = img[0] if img else None
                     if pk is None and before:
                         pk = before[0]
+                    if partial and images:
+                        img = [
+                            apply_json_diffs(b, a)
+                            if isinstance(a, JsonDiffVector) else a
+                            for b, a in zip(before, img)
+                        ]
                 else:
                     img = row
                     pk = img[0] if img else None
                 v = img[1] if len(img) > 1 else None
+                if partial and not images and isinstance(v, JsonDiffVector):
+                    # the value slot needs column 1 alone
+                    v = apply_json_diffs(before[1], v) if holds_v else None
+                    if not isinstance(v, (int, float)):
+                        v = None
                 kinds.append(kind)
                 dbs.append(db)
                 tbls.append(tbl)
                 pks.append(pk if pk.__class__ is str or pk is None else str(pk))
-                vals.append(v if v.__class__ is float else None)
+                vals.append(v)
                 xids.append(None)
                 if images:
                     imgs.append(img)

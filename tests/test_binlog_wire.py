@@ -3204,14 +3204,11 @@ def test_frame_walk_golden_outputs(spark):
 
 
 def test_frame_value_is_a_double_column_one():
-    """`value` is column 1 of the surfaced image when that is a double —
-    for a type-39 update, of the image with its diffs materialized. The
-    walks disagreed here: the frame read the raw diff vector (None for
-    every diff), `binlog_to_events` kept any numeric column 1 as a float
-    (7 → 7.0). One rule now: p → 2.5 (frame was None), q and the bigint
-    row x → None (`binlog_to_events` was 7.0); r and s are unchanged.
-    Every in-repo caller of `binlog_to_events` decodes `CDC_TABLE_TYPES`
-    chains, whose column 1 is a double."""
+    """The frame's `value` is column 1 of the surfaced image when that is
+    a double — for a type-39 update, with column 1's diff materialized
+    against the before image. `binlog_to_events` keeps its own rule:
+    column 1 cast to double, a type-39 document only when it is a
+    number."""
     import pandas as pd
 
     j = W.TableDef.from_mysql_types("shop", "j", ["varchar(64)", "json"])
@@ -3233,15 +3230,74 @@ def test_frame_value_is_a_double_column_one():
         W.encode_table_map(12, i),
         W.encode_rows_event(W.WRITE_ROWS_EVENT, 12, i, [["x", 7]]),
     ])
+    values = [2.5, None, None, 3.5, None]
+    assert W.wire_frame_cols(_F, W.MAGIC + chain)["value"] == values
     cols = W.wire_frame_cols(_F, W.MAGIC + chain, images=True)
-    assert cols["value"] == [2.5, None, None, 3.5, None]
+    assert cols["value"] == values
     assert cols["image"] == [["p", 2.5], ["q", 7], ["r", {"a": 2}], ["s", 3.5],
                              ["x", 7]]
     decode = W.binlog_to_events(_MapCapture())
     out = pd.concat(decode(iter([pd.DataFrame({"payload": [chain]})])))
     assert out["pk"].tolist() == ["p", "q", "r", "s", "x"]
-    assert out["value"].tolist()[0] == 2.5 and out["value"].tolist()[3] == 3.5
-    assert out["value"].isna().tolist() == [False, True, True, False, True]
+    assert out["value"].fillna(-1).tolist() == [2.5, 7.0, -1, 3.5, 7.0]
+
+
+def test_minimal_partial_json_update():
+    """A type-39 update under binlog_row_image=MINIMAL: the before image
+    holds the key only, so a JSON diff has no document to apply to. The
+    frame paths and `binlog_to_events` surface the key from the before
+    image and column 1 when it is a double (table m), None when column 1
+    is the diffed JSON (table j). An image-reading decode must
+    materialize every diff, so it raises ValueError."""
+    import pandas as pd
+
+    T, F = True, False
+    m = W.TableDef.from_mysql_types(
+        "shop", "m", ["varchar(64)", "double", "json"])
+    j = W.TableDef.from_mysql_types("shop", "j", ["varchar(64)", "json"])
+    diff = W.JsonDiffVector([W.JsonDiff(W.JSON_DIFF_REPLACE, "$.k", 2)])
+    chain = b"".join([
+        W.encode_fde(),
+        W.encode_query("shop", "BEGIN"),
+        W.encode_table_map(5, m),
+        W.encode_rows_event(
+            W.PARTIAL_UPDATE_ROWS_EVENT, 5, m,
+            [(["m", None, None], [None, 4.5, diff])],
+            present=[T, F, F], present_after=[F, T, T]),
+        W.encode_table_map(6, j),
+        W.encode_rows_event(
+            W.PARTIAL_UPDATE_ROWS_EVENT, 6, j, [(["n", None], [None, diff])],
+            present=[T, F], present_after=[F, T]),
+        W.encode_xid(5),
+    ])
+    wire = W.MAGIC + chain
+    assert W.wire_frame_cols(_F, wire) == {
+        "file_name": [_F] * 4,
+        "pos": [0, 1, 2, 3],
+        "kind": ["BEGIN", "UPDATE", "UPDATE", "COMMIT"],
+        "db": [None, "shop", "shop", None],
+        "tbl": [None, "m", "j", None],
+        "pk": [None, "m", "n", None],
+        "value": [None, 4.5, None, None],
+        "xid": [None, None, None, 5],
+    }
+    assert W.wire_frame_rows(_F, wire) == [
+        (_F, 0, "BEGIN", None, None, None, None, None),
+        (_F, 1, "UPDATE", "shop", "m", "m", 4.5, None),
+        (_F, 2, "UPDATE", "shop", "j", "n", None, None),
+        (_F, 3, "COMMIT", None, None, None, None, 5),
+    ]
+    batch = pd.DataFrame({"path": ["/x/" + _F], "content": [wire]})
+    frame = pd.concat(W._decode_wire_batches(iter([batch])))
+    assert frame["pk"].tolist() == [None, "m", "n", None]
+    assert frame["value"].fillna(-1).tolist() == [-1, 4.5, -1, -1]
+    decode = W.binlog_to_events(_MapCapture())
+    out = pd.concat(decode(iter([pd.DataFrame({"payload": [chain]})])))
+    assert out[["tbl", "action", "pk"]].values.tolist() == [
+        ["m", "UPDATE", "m"], ["j", "UPDATE", "n"]]
+    assert out["value"].fillna(-1).tolist() == [4.5, -1]
+    with pytest.raises(ValueError, match="REPLACE path missing"):
+        W.wire_frame_rows(_F, wire, include_values=True)
 
 
 # ---------------------------------------------------------------------------

