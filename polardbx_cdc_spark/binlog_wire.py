@@ -1699,11 +1699,240 @@ def decode_events(buf: bytes, verify_crc: bool = True,
         raise ValueError(f"malformed event: {exc!r}") from exc
 
 
+def _parse_table_map(body: bytes) -> tuple[int, "TableDef", dict]:
+    """One TABLE_MAP body → (table id, its `TableDef`, the event's
+    fields). `_decode_frames` memoizes it per body."""
+    tid = int.from_bytes(body[0:6], "little")
+    p = 8
+    dlen = body[p]
+    db = body[p + 1 : p + 1 + dlen].decode()
+    p += 1 + dlen + 1
+    tlen = body[p]
+    tbl = body[p + 1 : p + 1 + tlen].decode()
+    p += 1 + tlen + 1
+    ncols, p = _read_lenenc(body, p)
+    raw_types = list(body[p : p + ncols])
+    p += ncols
+    mlen, p = _read_lenenc(body, p)
+    types = _decode_col_meta(raw_types, body[p : p + mlen])
+    p += mlen
+    p += (ncols + 7) // 8  # null bitmap
+    # optional-metadata TLVs (MySQL 8): SIGNEDNESS carries the
+    # unsigned bits for numeric columns, MSB-first; with
+    # binlog_row_metadata=FULL the stream also self-describes
+    # column names, ENUM/SET labels, and the simple primary key
+    unsigned: set[int] = set()
+    col_names: list[str] | None = None
+    pk: list[int] | None = None
+    enum_labels: dict[int, list[str]] = {}
+    set_labels: dict[int, list[str]] = {}
+    charsets: dict[int, int] = {}
+    default_cs: int | None = None
+    geometry_types: dict[int, int] = {}
+    invisible: set[int] = set()
+
+    pk_prefixes: dict[int, int] = {}
+    es_charsets: dict[int, int] = {}
+    es_default_cs: int | None = None
+    raw_enum_labels: bytes | None = None
+    raw_set_labels: bytes | None = None
+
+    def _read_label_lists(val: bytes, targets: list[int],
+                          codec_of) -> dict:
+        out: dict[int, list[str]] = {}
+        vp = 0
+        for col in targets:
+            if vp >= len(val):
+                break
+            cnt, vp = _read_lenenc(val, vp)
+            labels = []
+            for _ in range(cnt):
+                ln, vp = _read_lenenc(val, vp)
+                labels.append(
+                    val[vp : vp + ln].decode(codec_of(col))
+                )
+                vp += ln
+            out[col] = labels
+        return out
+
+    while p < len(body):
+        tlv_type = body[p]
+        tlv_len, q = _read_lenenc(body, p + 1)
+        val = body[q : q + tlv_len]
+        p = q + tlv_len
+        if tlv_type == _SIGNEDNESS_TLV:
+            numeric_idx = [
+                i for i, rt in enumerate(raw_types) if rt in _NUMERIC_TYPES
+            ]
+            for bit, col in enumerate(numeric_idx):
+                if val[bit // 8] & (0x80 >> (bit % 8)):
+                    unsigned.add(col)
+        elif tlv_type == _COLUMN_NAME_TLV:
+            col_names = []
+            vp = 0
+            while vp < len(val):
+                ln, vp = _read_lenenc(val, vp)
+                col_names.append(val[vp : vp + ln].decode())
+                vp += ln
+        elif tlv_type == _ENUM_STR_VALUE_TLV:
+            # label TEXT charset rides TLV 10/11, which the
+            # server writes AFTER this one — defer the decode
+            raw_enum_labels = val
+        elif tlv_type == _SET_STR_VALUE_TLV:
+            raw_set_labels = val
+        elif tlv_type == _SIMPLE_PRIMARY_KEY_TLV:
+            pk = []
+            vp = 0
+            while vp < len(val):
+                idx, vp = _read_lenenc(val, vp)
+                pk.append(idx)
+        elif tlv_type == _PRIMARY_KEY_WITH_PREFIX_TLV:
+            pk = []
+            vp = 0
+            while vp < len(val):
+                idx, vp = _read_lenenc(val, vp)
+                plen, vp = _read_lenenc(val, vp)
+                pk.append(idx)
+                if plen:
+                    pk_prefixes[idx] = plen
+        elif tlv_type == _ENUM_SET_DEFAULT_CHARSET_TLV:
+            vp = 0
+            es_default_cs, vp = _read_lenenc(val, vp)
+            es_cols_d = [
+                i for i, (rt, m) in enumerate(types)
+                if rt == TYPE_STRING and isinstance(m, tuple)
+                and m[0] in (TYPE_ENUM, TYPE_SET)
+            ]
+            while vp < len(val):
+                ordinal, vp = _read_lenenc(val, vp)
+                cs, vp = _read_lenenc(val, vp)
+                if ordinal < len(es_cols_d):
+                    es_charsets[es_cols_d[ordinal]] = cs
+        elif tlv_type == _ENUM_SET_COLUMN_CHARSET_TLV:
+            vp = 0
+            for col in (
+                i for i, (rt, m) in enumerate(types)
+                if rt == TYPE_STRING and isinstance(m, tuple)
+                and m[0] in (TYPE_ENUM, TYPE_SET)
+            ):
+                if vp >= len(val):
+                    break
+                cs, vp = _read_lenenc(val, vp)
+                es_charsets[col] = cs
+        elif tlv_type == _DEFAULT_CHARSET_TLV:
+            # default collation + (char-column-ordinal, collation)
+            # override pairs
+            vp = 0
+            default_cs, vp = _read_lenenc(val, vp)
+            char_cols = _character_columns(types)
+            while vp < len(val):
+                ordinal, vp = _read_lenenc(val, vp)
+                cs, vp = _read_lenenc(val, vp)
+                if ordinal < len(char_cols):
+                    charsets[char_cols[ordinal]] = cs
+        elif tlv_type == _COLUMN_CHARSET_TLV:
+            vp = 0
+            for col in _character_columns(types):
+                if vp >= len(val):
+                    break
+                cs, vp = _read_lenenc(val, vp)
+                charsets[col] = cs
+        elif tlv_type == _GEOMETRY_TYPE_TLV:
+            vp = 0
+            for col in (
+                i for i, (rt, _) in enumerate(types)
+                if rt == TYPE_GEOMETRY
+            ):
+                if vp >= len(val):
+                    break
+                gt, vp = _read_lenenc(val, vp)
+                geometry_types[col] = gt
+        elif tlv_type == _COLUMN_VISIBILITY_TLV:
+            for i in range(len(types)):
+                if i // 8 < len(val) and not (
+                    val[i // 8] & (0x80 >> (i % 8))
+                ):
+                    invisible.add(i)
+    def _es_codec(col: int) -> str:
+        return _codec_for(es_charsets.get(col, es_default_cs))
+
+    if raw_enum_labels is not None:
+        enum_labels = _read_label_lists(
+            raw_enum_labels,
+            [
+                i for i, (rt, m) in enumerate(types)
+                if rt == TYPE_STRING and isinstance(m, tuple)
+                and m[0] == TYPE_ENUM
+            ],
+            _es_codec,
+        )
+    if raw_set_labels is not None:
+        set_labels = _read_label_lists(
+            raw_set_labels,
+            [
+                i for i, (rt, m) in enumerate(types)
+                if rt == TYPE_STRING and isinstance(m, tuple)
+                and m[0] == TYPE_SET
+            ],
+            _es_codec,
+        )
+    td = TableDef(
+        db, tbl, types, unsigned, col_names=col_names, pk=pk,
+        enum_labels=enum_labels, set_labels=set_labels,
+        charsets=charsets, default_charset=default_cs,
+        geometry_types=geometry_types, invisible=invisible,
+        pk_prefixes=pk_prefixes, enum_set_charsets=es_charsets,
+        enum_set_default_charset=es_default_cs,
+    )
+    fields: dict = dict(table_id=tid, db=db, tbl=tbl, types=types,
+                        unsigned=unsigned)
+    if charsets or default_cs is not None:
+        fields["charsets"] = charsets
+        if default_cs is not None:
+            fields["default_charset"] = default_cs
+    if geometry_types:
+        fields["geometry_types"] = geometry_types
+    if invisible:
+        fields["invisible_columns"] = sorted(invisible)
+    if col_names is not None:
+        fields["col_names"] = col_names
+    if pk is not None:
+        fields["pk_columns"] = pk
+    if pk_prefixes:
+        fields["pk_prefixes"] = pk_prefixes
+    if enum_labels:
+        fields["enum_labels"] = enum_labels
+    if set_labels:
+        fields["set_labels"] = set_labels
+    if es_charsets or es_default_cs is not None:
+        fields["enum_set_charsets"] = es_charsets
+        if es_default_cs is not None:
+            fields["enum_set_default_charset"] = es_default_cs
+    return tid, td, fields
+
+
+def _fresh_fields(fields: dict) -> dict:
+    """A memoized TABLE_MAP's event fields in containers of their own, so
+    no event shares a list, set or dict with another or with its
+    `TableDef`."""
+    out = {}
+    for k, v in fields.items():
+        if isinstance(v, dict):
+            v = {c: x.copy() if isinstance(x, list) else x
+                 for c, x in v.items()}
+        elif isinstance(v, (list, set)):
+            v = v.copy()
+        out[k] = v
+    return out
+
+
 def _decode_frames(buf: bytes, verify_crc: bool,
                    tolerate_truncation: bool) -> list[dict]:
     """`decode_events`' frame loop."""
     events: list[dict] = []
     tables: dict[int, TableDef] = {}
+    #: TABLE_MAP body → `_parse_table_map` result, for this call only
+    table_maps: dict[bytes, tuple[int, TableDef, dict]] = {}
     pos = 0
     csum = CHECKSUM_LEN  # per-stream trailer width, set by each FDE
     while pos < len(buf):
@@ -1762,211 +1991,16 @@ def _decode_frames(buf: bytes, verify_crc: bool,
             # post-header-table width, not an algorithm
             ev["checksum_alg"] = body[-1] if fde_has_alg else None
         elif tc == TABLE_MAP_EVENT:
-            tid = int.from_bytes(body[0:6], "little")
-            p = 8
-            dlen = body[p]
-            db = body[p + 1 : p + 1 + dlen].decode()
-            p += 1 + dlen + 1
-            tlen = body[p]
-            tbl = body[p + 1 : p + 1 + tlen].decode()
-            p += 1 + tlen + 1
-            ncols, p = _read_lenenc(body, p)
-            raw_types = list(body[p : p + ncols])
-            p += ncols
-            mlen, p = _read_lenenc(body, p)
-            types = _decode_col_meta(raw_types, body[p : p + mlen])
-            p += mlen
-            p += (ncols + 7) // 8  # null bitmap
-            # optional-metadata TLVs (MySQL 8): SIGNEDNESS carries the
-            # unsigned bits for numeric columns, MSB-first; with
-            # binlog_row_metadata=FULL the stream also self-describes
-            # column names, ENUM/SET labels, and the simple primary key
-            unsigned: set[int] = set()
-            col_names: list[str] | None = None
-            pk: list[int] | None = None
-            enum_labels: dict[int, list[str]] = {}
-            set_labels: dict[int, list[str]] = {}
-            charsets: dict[int, int] = {}
-            default_cs: int | None = None
-            geometry_types: dict[int, int] = {}
-            invisible: set[int] = set()
-
-            pk_prefixes: dict[int, int] = {}
-            es_charsets: dict[int, int] = {}
-            es_default_cs: int | None = None
-            raw_enum_labels: bytes | None = None
-            raw_set_labels: bytes | None = None
-
-            def _read_label_lists(val: bytes, targets: list[int],
-                                  codec_of) -> dict:
-                out: dict[int, list[str]] = {}
-                vp = 0
-                for col in targets:
-                    if vp >= len(val):
-                        break
-                    cnt, vp = _read_lenenc(val, vp)
-                    labels = []
-                    for _ in range(cnt):
-                        ln, vp = _read_lenenc(val, vp)
-                        labels.append(
-                            val[vp : vp + ln].decode(codec_of(col))
-                        )
-                        vp += ln
-                    out[col] = labels
-                return out
-
-            while p < len(body):
-                tlv_type = body[p]
-                tlv_len, q = _read_lenenc(body, p + 1)
-                val = body[q : q + tlv_len]
-                p = q + tlv_len
-                if tlv_type == _SIGNEDNESS_TLV:
-                    numeric_idx = [
-                        i for i, rt in enumerate(raw_types) if rt in _NUMERIC_TYPES
-                    ]
-                    for bit, col in enumerate(numeric_idx):
-                        if val[bit // 8] & (0x80 >> (bit % 8)):
-                            unsigned.add(col)
-                elif tlv_type == _COLUMN_NAME_TLV:
-                    col_names = []
-                    vp = 0
-                    while vp < len(val):
-                        ln, vp = _read_lenenc(val, vp)
-                        col_names.append(val[vp : vp + ln].decode())
-                        vp += ln
-                elif tlv_type == _ENUM_STR_VALUE_TLV:
-                    # label TEXT charset rides TLV 10/11, which the
-                    # server writes AFTER this one — defer the decode
-                    raw_enum_labels = val
-                elif tlv_type == _SET_STR_VALUE_TLV:
-                    raw_set_labels = val
-                elif tlv_type == _SIMPLE_PRIMARY_KEY_TLV:
-                    pk = []
-                    vp = 0
-                    while vp < len(val):
-                        idx, vp = _read_lenenc(val, vp)
-                        pk.append(idx)
-                elif tlv_type == _PRIMARY_KEY_WITH_PREFIX_TLV:
-                    pk = []
-                    vp = 0
-                    while vp < len(val):
-                        idx, vp = _read_lenenc(val, vp)
-                        plen, vp = _read_lenenc(val, vp)
-                        pk.append(idx)
-                        if plen:
-                            pk_prefixes[idx] = plen
-                elif tlv_type == _ENUM_SET_DEFAULT_CHARSET_TLV:
-                    vp = 0
-                    es_default_cs, vp = _read_lenenc(val, vp)
-                    es_cols_d = [
-                        i for i, (rt, m) in enumerate(types)
-                        if rt == TYPE_STRING and isinstance(m, tuple)
-                        and m[0] in (TYPE_ENUM, TYPE_SET)
-                    ]
-                    while vp < len(val):
-                        ordinal, vp = _read_lenenc(val, vp)
-                        cs, vp = _read_lenenc(val, vp)
-                        if ordinal < len(es_cols_d):
-                            es_charsets[es_cols_d[ordinal]] = cs
-                elif tlv_type == _ENUM_SET_COLUMN_CHARSET_TLV:
-                    vp = 0
-                    for col in (
-                        i for i, (rt, m) in enumerate(types)
-                        if rt == TYPE_STRING and isinstance(m, tuple)
-                        and m[0] in (TYPE_ENUM, TYPE_SET)
-                    ):
-                        if vp >= len(val):
-                            break
-                        cs, vp = _read_lenenc(val, vp)
-                        es_charsets[col] = cs
-                elif tlv_type == _DEFAULT_CHARSET_TLV:
-                    # default collation + (char-column-ordinal, collation)
-                    # override pairs
-                    vp = 0
-                    default_cs, vp = _read_lenenc(val, vp)
-                    char_cols = _character_columns(types)
-                    while vp < len(val):
-                        ordinal, vp = _read_lenenc(val, vp)
-                        cs, vp = _read_lenenc(val, vp)
-                        if ordinal < len(char_cols):
-                            charsets[char_cols[ordinal]] = cs
-                elif tlv_type == _COLUMN_CHARSET_TLV:
-                    vp = 0
-                    for col in _character_columns(types):
-                        if vp >= len(val):
-                            break
-                        cs, vp = _read_lenenc(val, vp)
-                        charsets[col] = cs
-                elif tlv_type == _GEOMETRY_TYPE_TLV:
-                    vp = 0
-                    for col in (
-                        i for i, (rt, _) in enumerate(types)
-                        if rt == TYPE_GEOMETRY
-                    ):
-                        if vp >= len(val):
-                            break
-                        gt, vp = _read_lenenc(val, vp)
-                        geometry_types[col] = gt
-                elif tlv_type == _COLUMN_VISIBILITY_TLV:
-                    for i in range(len(types)):
-                        if i // 8 < len(val) and not (
-                            val[i // 8] & (0x80 >> (i % 8))
-                        ):
-                            invisible.add(i)
-            def _es_codec(col: int) -> str:
-                return _codec_for(es_charsets.get(col, es_default_cs))
-
-            if raw_enum_labels is not None:
-                enum_labels = _read_label_lists(
-                    raw_enum_labels,
-                    [
-                        i for i, (rt, m) in enumerate(types)
-                        if rt == TYPE_STRING and isinstance(m, tuple)
-                        and m[0] == TYPE_ENUM
-                    ],
-                    _es_codec,
-                )
-            if raw_set_labels is not None:
-                set_labels = _read_label_lists(
-                    raw_set_labels,
-                    [
-                        i for i, (rt, m) in enumerate(types)
-                        if rt == TYPE_STRING and isinstance(m, tuple)
-                        and m[0] == TYPE_SET
-                    ],
-                    _es_codec,
-                )
-            tables[tid] = TableDef(
-                db, tbl, types, unsigned, col_names=col_names, pk=pk,
-                enum_labels=enum_labels, set_labels=set_labels,
-                charsets=charsets, default_charset=default_cs,
-                geometry_types=geometry_types, invisible=invisible,
-                pk_prefixes=pk_prefixes, enum_set_charsets=es_charsets,
-                enum_set_default_charset=es_default_cs,
-            )
-            ev.update(table_id=tid, db=db, tbl=tbl, types=types, unsigned=unsigned)
-            if charsets or default_cs is not None:
-                ev["charsets"] = dict(charsets)
-                if default_cs is not None:
-                    ev["default_charset"] = default_cs
-            if geometry_types:
-                ev["geometry_types"] = dict(geometry_types)
-            if invisible:
-                ev["invisible_columns"] = sorted(invisible)
-            if col_names is not None:
-                ev["col_names"] = col_names
-            if pk is not None:
-                ev["pk_columns"] = pk
-            if pk_prefixes:
-                ev["pk_prefixes"] = dict(pk_prefixes)
-            if enum_labels:
-                ev["enum_labels"] = enum_labels
-            if set_labels:
-                ev["set_labels"] = set_labels
-            if es_charsets or es_default_cs is not None:
-                ev["enum_set_charsets"] = dict(es_charsets)
-                if es_default_cs is not None:
-                    ev["enum_set_default_charset"] = es_default_cs
+            # a chain re-announces each table before every rows event:
+            # parse each distinct body once per call, so the TableDef
+            # (and its compiled cell decoders) is shared by its repeats
+            key = bytes(body)
+            hit = table_maps.get(key)
+            if hit is None:
+                hit = table_maps[key] = _parse_table_map(key)
+            tid, td, fields = hit
+            tables[tid] = td
+            ev.update(_fresh_fields(fields))
         elif tc in ROWS_EVENTS:
             tid = int.from_bytes(body[0:6], "little")
             td = tables[tid]
@@ -2023,9 +2057,9 @@ def _decode_frames(buf: bytes, verify_crc: bool,
             if tc in UPDATE_EVENTS and not all(pa):
                 ev["present_columns_after"] = [i for i, x in enumerate(pa) if x]
             if td.col_names is not None:
-                ev["col_names"] = td.col_names
+                ev["col_names"] = list(td.col_names)
                 if td.pk is not None:
-                    ev["pk_columns"] = td.pk
+                    ev["pk_columns"] = list(td.pk)
         elif tc == QUERY_EVENT:
             _tid, _et, dlen, _ec, svlen = struct.unpack_from("<IIBHH", body, 0)
             p = 13 + svlen
@@ -2652,8 +2686,8 @@ def export_wire_files(spark, sink_dir: str, wire_dir: str,
     EAGER: rendering executes inside this call on BOTH paths — the wire
     files exist on disk the moment it returns, and the returned manifest
     DataFrame (file_seq, file_name, n_events, n_bytes — the files
-    rendered THIS call) is materialized, so re-consuming it never
-    re-renders."""
+    rendered THIS call) is a local frame (`session.local_frame`), so
+    re-consuming it never re-renders and collecting it runs no job."""
     return _export_chains(spark, sink_dir, wire_dir, None, "binlog.",
                           incremental, trace_markers, emit_gtid,
                           compress_txns, row_metadata_full, _census)
@@ -2678,6 +2712,8 @@ def _export_chains(spark, sink_dir: str, wire_dir: str, chain: str | None,
 
     import pandas as pd
     import pyarrow.compute as pc
+
+    from .session import local_frame
 
     os.makedirs(wire_dir, exist_ok=True)
     key_cols = ([chain] if chain else []) + ["file_seq"]
@@ -2717,7 +2753,7 @@ def _export_chains(spark, sink_dir: str, wire_dir: str, chain: str | None,
         or (k[-1] == old_max.get(k[:-1]) and max_seq[k[:-1]] > k[-1])
     )
     if not changed:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
 
     partitioned = os.path.isdir(_sink_file_dir(sink_dir, key_cols, changed[0]))
     if partitioned:
@@ -2986,7 +3022,7 @@ def _export_chains(spark, sink_dir: str, wire_dir: str, chain: str | None,
             json.dump({":".join(map(str, k)): v
                        for k, v in sorted(merged.items())}, fh)
         os.replace(tmp, manifest_path)
-    return spark.createDataFrame(rows, out_schema)
+    return local_frame(spark, rows, out_schema)
 
 
 def wire_frame_cols(name: str | None, buf: bytes,

@@ -374,10 +374,11 @@ def consume_from_group(spark, host: str, port: int, group, member_id: str = "c0"
     when the server has no files yet.
 
     ``spool_dir`` (shared filesystem/object-store path): land the fetched
-    bytes there, event-boundary-split into ~16 MB segment files, and
-    decode via a distributed ``binaryFile`` scan — the scale path when a
-    resume spans many rotated files (without it, the whole delta rides
-    through one driver row)."""
+    bytes there, event-boundary-split into one segment file per core
+    (at most 16 MB each), and decode via a distributed ``binaryFile``
+    scan (`spool_decode`) — the scale path when a resume spans many
+    rotated files (without it, the whole delta rides through one driver
+    row)."""
     gen = group.join(member_id)
     committed = group.committed().get("wire")
     if committed:
@@ -410,25 +411,38 @@ def consume_from_group(spark, host: str, port: int, group, member_id: str = "c0"
     group.commit(
         {"wire": f"{chain[min(idx, len(chain) - 1)]}:{cur_pos:012d}"}, gen
     )
+    from .session import local_frame  # local: module stays server-usable without Spark
+
     if spool_dir:
         decoded = spool_decode(spark, bytes(blob), spool_dir)
         if decoded is None:
-            return spark.createDataFrame(
-                [], "db string, tbl string, action string, pk string, value double"
+            return local_frame(
+                spark, [],
+                "db string, tbl string, action string, pk string, value double",
             )
         return decoded
-    payload = spark.createDataFrame([(bytearray(blob),)], "payload binary")
-    return W.binlog_to_events(payload)
+    return W.binlog_to_events(
+        local_frame(spark, [(bytes(blob),)], "payload binary"))
 
 
-def spool_decode(spark, blob: bytes, spool_dir: str,
-                 seg_limit: int = 16 << 20):
+def spool_decode(spark, blob: bytes, spool_dir: str):
     """The distributed decode of a fetched dump blob: land it as segment
-    files under ``spool_dir`` (`spool_segments`), then decode them with a
-    ``binaryFile`` scan through ``binlog_wire.binlog_to_events``. Returns
-    the (db, tbl, action, pk, value) frame, or None when the blob held no
+    files under ``spool_dir`` (`spool_segments`), one per core, then
+    decode them with a ``binaryFile`` scan through
+    ``binlog_wire.binlog_to_events``, one task per segment. Returns the
+    (db, tbl, action, pk, value) frame, or None when the blob held no
     events. Reads ``spool_segments`` from the module at call time, so a
-    wrapper installed on the module attribute sees every call."""
+    wrapper installed on the module attribute sees every call.
+
+    Segments are ``ceil(len(blob) / defaultParallelism)`` bytes, capped
+    at 16 MB: every core decodes one, and none decodes two. Smaller
+    segments would only add tasks, and each Python task pays a fixed
+    start-up: about 0.5 s from submission to its first line on a 4-core
+    box, about 0.2 s of it the ``importlib.invalidate_caches()`` call
+    that PySpark's worker makes for every task (it re-reads
+    ``pyspark.zip``'s central directory once per cached zipimporter)."""
+    cores = spark.sparkContext.defaultParallelism
+    seg_limit = min(16 << 20, -(-len(blob) // cores))
     if spool_segments(blob, spool_dir, seg_limit) == 0:
         return None
     from pyspark.sql import functions as F  # local: module stays server-usable without Spark
@@ -444,33 +458,35 @@ def spool_decode(spark, blob: bytes, spool_dir: str,
 
 def spool_segments(blob: bytes, spool_dir: str,
                    seg_limit: int = 16 << 20) -> int:
-    """Land a fetched dump blob as ~``seg_limit``-sized segment files that
-    each decode STANDALONE, for a distributed ``binaryFile`` scan —
-    the scale path between a network attach (one driver-side byte pump)
-    and the executor-side decode. Splits ONLY at event boundaries; a
+    """Land a fetched dump blob as segment files of about ``seg_limit``
+    blob bytes that each decode STANDALONE, for a distributed
+    ``binaryFile`` scan — the scale path between a network attach (one
+    driver-side byte pump) and the executor-side decode. Splits ONLY at event boundaries; a
     split is forced before TABLE_MAP/QUERY/GTID/FDE so row events stay
     with their table map and txns stay whole per segment. Every segment
     OPENS with the stream's FDE (carried forward across splits — the
     relay-log writer contract: each relay file starts with its own FDE),
     so a segment is self-describing down to the checksum algorithm: a
     binlog_checksum=NONE master's trailer-less frames decode standalone
-    because the carried FDE discloses alg=0. Returns the number of
-    segment files written (atomic .tmp → rename per file)."""
+    because the carried FDE discloses alg=0. The carried FDE does not
+    count toward ``seg_limit``, so ``seg_limit = ceil(len(blob) / n)``
+    writes at most n segments. Returns the number of segment files
+    written (atomic .tmp → rename per file)."""
     os.makedirs(spool_dir, exist_ok=True)
-    seg, seg_n = bytearray(), 0
+    seg, seg_n, carried = bytearray(), 0, 0
     last_fde: bytes | None = None
 
     def _flush():
-        nonlocal seg, seg_n
+        nonlocal seg, seg_n, carried
         if seg:
             path = os.path.join(spool_dir, f"segment_{seg_n:06d}.bin")
             with open(path + ".tmp", "wb") as fh:
                 fh.write(seg)
             os.replace(path + ".tmp", path)
-            seg, seg_n = bytearray(), seg_n + 1
+            seg, seg_n, carried = bytearray(), seg_n + 1, 0
 
     for _off, tc, frame in _walk_events(blob):
-        if len(seg) >= seg_limit and tc in (
+        if len(seg) - carried >= seg_limit and tc in (
             W.TABLE_MAP_EVENT, W.QUERY_EVENT, W.GTID_LOG_EVENT,
             W.FORMAT_DESCRIPTION_EVENT,
         ):
@@ -479,6 +495,7 @@ def spool_segments(blob: bytes, spool_dir: str,
             last_fde = bytes(frame)
         elif not seg and last_fde is not None:
             seg += last_fde  # fresh segment opens with the stream's FDE
+            carried = len(last_fde)
         seg += frame
     _flush()
     return seg_n
@@ -629,6 +646,8 @@ def attach_from_tso(spark, host: str, port: int, tso: str):
     hit = seek_tso(host, port, str(tso))
     if hit is None:
         return None
+    from .session import local_frame  # local: module stays server-usable without Spark
+
     blob = dump_fetch(host, port, hit["file_name"], hit["pos"])
-    payload = spark.createDataFrame([(bytearray(blob),)], "payload binary")
-    return W.binlog_to_events(payload)
+    return W.binlog_to_events(
+        local_frame(spark, [(bytes(blob),)], "payload binary"))

@@ -41,7 +41,7 @@ from polardbx_cdc_spark.functions import (
 from polardbx_cdc_spark.model import derive_cdc_stream, oracle_cdc_query
 from polardbx_cdc_spark.operators import apply as apply_ops
 from polardbx_cdc_spark.operators import filters, flashback, merge, routing, validation
-from polardbx_cdc_spark.session import load_table
+from polardbx_cdc_spark.session import load_table, local_frame
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -4244,6 +4244,11 @@ def _cdc_rollup(decoded: DataFrame) -> DataFrame:
     )
 
 
+#: `_cdc_rollup`'s columns, for a rollup collected to the driver
+_CDC_ROLLUP_DDL = ("db string, tbl string, action string, n long, "
+                   "value_cents long, pk_hash_sum long")
+
+
 @register(
     "cdc_binlog_wire_roundtrip",
     oracle_cdc_query(
@@ -7636,13 +7641,15 @@ def cdc_dump_attach_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference's CdcServer.java:154 dump contract fronted by the
     MySQL protocol), a GTID auto-position replica attach with an EMPTY
     executed set pulls the whole rotated chain through the socket, the
-    fetched bytes spool into standalone-decodable segment files
-    (`dump_server.spool_segments` — event-boundary splits), and a
-    distributed `binaryFile` scan decodes them back
-    (`binlog_to_events`, Arrow-batched mapInPandas). The decoded rows
-    hash-check against the raw-cdc oracle, so the handshake, packet
+    fetched bytes spool into standalone-decodable segment files, one
+    per core (`dump_server.spool_decode` — event-boundary splits), and
+    a distributed `binaryFile` scan decodes them back, one task per
+    segment (`binlog_to_events`, Arrow-batched mapInPandas). The decoded
+    rows hash-check against the raw-cdc oracle, so the handshake, packet
     framing (incl. >16MB splits), GTID skip evaluation, ROTATE chain
-    walk, AND every row image must survive the socket exactly.
+    walk, AND every row image must survive the socket exactly. The
+    collected rollup comes back as a local frame (`session.local_frame`):
+    collecting the result runs no further Spark job.
 
     Scale posture: the TCP attach is CONTROL PLANE — one replica
     connection pumping frame-whole bytes at the master's write rate
@@ -7664,22 +7671,16 @@ def cdc_dump_attach_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             host, port = srv.address
             # GTID auto-position attach, empty executed set → full chain
             blob = MD.binlog_dump_gtid_fetch(host, port, {})
-        spool = os.path.join(work, "spool")
-        # 1 MB segments: the sf0.1 chain (~10 MB) fans the decode across
-        # ~10 executors instead of 3; at 100 TB the spool would live on
-        # shared storage and the limit would rise toward row-group size
-        decoded = DS.spool_decode(spark, blob, spool, seg_limit=1 << 20)
+        # one segment per core: at 100 TB the spool would live on shared
+        # storage and the segments would cap at spool_decode's 16 MB
+        decoded = DS.spool_decode(spark, blob, os.path.join(work, "spool"))
         if decoded is None:
             raise RuntimeError("dump attach fetched no events")
         # bounded: ≤ |db|×|tbl|×|action| = 45 rollup rows
         rows = _cdc_rollup(decoded).collect()
     finally:
         shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "db string, tbl string, action string, n long, "
-        "value_cents long, pk_hash_sum long",
-    )
+    return local_frame(spark, rows, _CDC_ROLLUP_DDL)
 
 
 @register(
@@ -7722,19 +7723,14 @@ def cdc_dump_none_checksum_decode(spark: SparkSession, sf_dir: str) -> DataFrame
         with MD.MySQLDumpServer(wire, binlog_checksum="NONE") as srv:
             host, port = srv.address
             blob = MD.binlog_dump_fetch(host, port, "", 4)
-        spool = os.path.join(work, "spool")
-        decoded = DS.spool_decode(spark, blob, spool, seg_limit=1 << 20)
+        decoded = DS.spool_decode(spark, blob, os.path.join(work, "spool"))
         if decoded is None:
             raise RuntimeError("NONE-checksum dump fetched no events")
         # bounded: ≤ |db|×|tbl|×|action| = 45 rollup rows
         rows = _cdc_rollup(decoded).collect()
     finally:
         shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "db string, tbl string, action string, n long, "
-        "value_cents long, pk_hash_sum long",
-    )
+    return local_frame(spark, rows, _CDC_ROLLUP_DDL)
 
 
 # --------------------------------------------------------------------------

@@ -81,6 +81,30 @@ def get_spark(app_name: str = "polardbx_cdc_spark", cpus: int | None = None) -> 
     return spark
 
 
+def local_frame(spark: SparkSession, rows, schema: str):
+    """A small driver-built frame whose collect runs no Spark job.
+
+    ``rows`` (tuples, in ``schema``'s DDL column order) reach the JVM as
+    one Arrow table, which Spark plans as a ``LocalRelation`` while it
+    stays under ``spark.sql.execution.arrow.localRelationThreshold``.
+    ``createDataFrame`` over a Python list ships the rows as an RDD
+    instead: collecting that frame runs a ``defaultParallelism``-task job
+    through Python workers, and a ``mapInPandas`` over it re-serializes
+    the rows in a Python stage first. A pyarrow table rather than a
+    pandas frame: it needs no Arrow session setting, keeps an empty
+    frame local and a nullable long exact."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, struct)
+
+
 def ensure_nanos_readable(spark: SparkSession) -> None:
     """Make TIMESTAMP(NANOS) parquet readable on ANY session, including one
     this module didn't build (the driver's correctness harness uses a

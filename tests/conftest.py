@@ -21,3 +21,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_ORACLE
+
+
+def _group_jobs(sc, group: str) -> list[list[int]]:
+    """Task counts per stage of each job the job group ran, job order."""
+    st = sc.statusTracker()
+    return [[st.getStageInfo(s).numTasks for s in st.getJobInfo(j).stageIds]
+            for j in sorted(st.getJobIdsForGroup(group))]
+
+
+def _run_in_group(sc, tag: str, fn, *args):
+    """``(job group, fn(*args))``, with fn's Spark jobs in a fresh group."""
+    import uuid
+
+    group = f"{tag}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, tag)
+    try:
+        return group, fn(*args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

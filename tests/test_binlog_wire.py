@@ -11,6 +11,7 @@ import struct
 
 import pytest
 
+from conftest import _group_jobs, _run_in_group
 from polardbx_cdc_spark import binlog_wire as W
 
 
@@ -679,25 +680,6 @@ def test_binlog_sink_recover_refuses_census_mismatch(spark, sf_dir, tmp_path):
     assert same._offset == sink._offset
 
 
-def _group_jobs(sc, group: str) -> list[list[int]]:
-    """Task counts per stage of each job the job group ran, job order."""
-    st = sc.statusTracker()
-    return [[st.getStageInfo(s).numTasks for s in st.getJobInfo(j).stageIds]
-            for j in sorted(st.getJobIdsForGroup(group))]
-
-
-def _run_in_group(sc, tag: str, fn, *args):
-    """``(job group, fn(*args))``, with fn's Spark jobs in a fresh group."""
-    import uuid
-
-    group = f"{tag}-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, tag)
-    try:
-        return group, fn(*args)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-
-
 def _steady_sink(spark, sf_dir, tmpdir):
     """A plain BinlogSink with a wire dir, its watermark armed by a first
     600-row batch, and the rest of the CDC frame: strictly newer rows,
@@ -1224,8 +1206,9 @@ def test_export_wire_files_x_reads_int_count_manifest(spark, tmp_path):
 
 def test_incremental_x_export_runs_no_spark_job(spark, tmp_path):
     """An incremental Binlog-X export over a 2-stream sink runs no Spark
-    job: the census reads the partition footers with pyarrow and the
-    one group of changed files renders in the calling process."""
+    job, its manifest's collect included: the census reads the partition
+    footers with pyarrow, the one group of changed files renders in the
+    calling process and the manifest is a local frame."""
     out, wire = str(tmp_path / "xsink"), str(tmp_path / "wire")
 
     def land(rows):
@@ -1238,10 +1221,11 @@ def test_incremental_x_export_runs_no_spark_job(spark, tmp_path):
     land([(0, *r) for r in rows if r[0] == 2])  # stream 0 gains file 3
 
     sc = spark.sparkContext
-    group, m = _run_in_group(sc, "incremental Binlog-X export",
-                             W.export_wire_files_x, spark, out, wire, True)
+    group, m = _run_in_group(
+        sc, "incremental Binlog-X export",
+        lambda: W.export_wire_files_x(spark, out, wire, True).collect())
     assert _group_jobs(sc, group) == []
-    assert sorted((r[0], r[1]) for r in m.collect()) == [(0, 1), (0, 2)]
+    assert sorted((r[0], r[1]) for r in m) == [(0, 1), (0, 2)]
 
 
 def test_rows_v1_cross_decode():
@@ -3372,3 +3356,82 @@ def test_vectorized_write_encode_is_byte_identical_to_row_path(spark):
     finally:
         W._encode_write_images = orig
     assert new == old
+
+
+def test_table_map_remapped_mid_stream_decodes_each_layout():
+    """One buffer re-maps table id 9 with a new layout (an ALTER between
+    transactions) and then back: each rows event decodes with the layout
+    of the TABLE_MAP that precedes it, although the first and third maps
+    are the same bytes."""
+    altered = W.TableDef("db0", "t0", [(W.TYPE_LONGLONG, None),
+                                       (W.TYPE_VARCHAR, 64),
+                                       (W.TYPE_LONG, None)])
+    blob = (
+        W.encode_table_map(9, TD)
+        + W.encode_rows_event(W.WRITE_ROWS_EVENT, 9, TD, [[1, "a", 1.5, 7]])
+        + W.encode_table_map(9, altered)
+        + W.encode_rows_event(W.WRITE_ROWS_EVENT, 9, altered, [[2, "b", -3]])
+        + W.encode_table_map(9, TD)
+        + W.encode_rows_event(W.UPDATE_ROWS_EVENT, 9, TD,
+                              [([1, "a", 1.5, 7], [1, "c", 2.5, 8])])
+    )
+    evs = W.decode_events(blob)
+    assert [e["types"] for e in evs[0::2]] == [TD.types, altered.types, TD.types]
+    assert [e["rows"] for e in evs[1::2]] == [
+        [[1, "a", 1.5, 7]], [[2, "b", -3]],
+        [([1, "a", 1.5, 7], [1, "c", 2.5, 8])],
+    ]
+
+
+def test_repeated_table_maps_compile_cell_decoders_once(monkeypatch):
+    """A chain re-announces its table before every rows event; one
+    ``decode_events`` call parses the repeated TABLE_MAP once, so the
+    cell decoders compile once, not once per map."""
+    calls = []
+    compile_ = W._compile_cell_decoders
+
+    def counting(td):
+        calls.append(td)
+        return compile_(td)
+
+    monkeypatch.setattr(W, "_compile_cell_decoders", counting)
+    n = 25
+    blob = b"".join(
+        W.encode_table_map(9, TD)
+        + W.encode_rows_event(W.WRITE_ROWS_EVENT, 9, TD, [[i, "x", 0.5, i]])
+        for i in range(n)
+    )
+    evs = W.decode_events(blob)
+    assert [e["rows"][0][0] for e in evs[1::2]] == list(range(n))
+    assert len(calls) == 1
+    W.decode_events(blob)  # the memo lasts one call
+    assert len(calls) == 2
+
+
+def test_repeated_table_map_events_share_no_fields():
+    """Events decoded from the same TABLE_MAP bytes are independent: a
+    caller mutating one event's ``types``, ``unsigned``, ``col_names``
+    or label lists changes no other event, and not the decode of the
+    rows events that follow."""
+    td = W.TableDef("db0", "t1", [(W.TYPE_LONGLONG, None), (W.TYPE_LONG, None),
+                                  (W.TYPE_STRING, (W.TYPE_ENUM, 1))],
+                    unsigned={1}, col_names=["id", "n", "e"], pk=[0],
+                    enum_labels={2: ["x", "y"]})
+    blob = b"".join(
+        W.encode_table_map(9, td)
+        + W.encode_rows_event(W.WRITE_ROWS_EVENT, 9, td, [[i, 2 ** 32 - 1, 1]])
+        for i in range(3)
+    )
+    evs = W.decode_events(blob)
+    want = W.decode_events(blob)
+    first = evs[0]
+    first["types"].append((W.TYPE_LONG, None))
+    first["unsigned"].add(0)
+    first["col_names"][0] = "changed"
+    first["pk_columns"].append(1)
+    first["enum_labels"][2].append("z")
+    evs[1]["col_names"].append("extra")
+    assert evs[2:] == want[2:]
+    assert evs[2]["types"] == td.types and evs[2]["unsigned"] == {1}
+    assert [e["rows"] for e in W.decode_events(blob)[1::2]] == [
+        [[i, 2 ** 32 - 1, 1]] for i in range(3)]

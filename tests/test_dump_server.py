@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import _group_jobs, _run_in_group
 from polardbx_cdc_spark import binlog_wire as W
 from polardbx_cdc_spark import dump_server as D
 
@@ -800,3 +801,38 @@ def test_dump_server_fuzz_1000_sessions_never_crash_handler(fuzz_served):
     hit = D.seek_tso(fuzz_served["host"], fuzz_served["port"],
                      "200".rjust(19, "0"))
     assert hit and hit["file_name"] == "binlog.000002"
+
+
+
+@pytest.fixture(scope="module")
+def dump_attach_groups(spark):
+    """One ``cdc_dump_attach_decode`` call at sf0.01 and one collect of
+    the frame it returns, each in a job group of its own (the chain is
+    rendered before either group opens)."""
+    from polardbx_cdc_spark import queries as Q
+
+    sf, sc = "/root/testdata/sf0.01", spark.sparkContext
+    Q._cdc_wire_fixture(spark, sf)
+    call, df = _run_in_group(sc, "dump attach call",
+                             Q.cdc_dump_attach_decode, spark, sf)
+    collect, rows = _run_in_group(sc, "dump attach collect", df.collect)
+    return call, collect, rows
+
+
+def test_dump_attach_decodes_one_segment_per_core(spark, dump_attach_groups):
+    """The attach's decode stage runs ``defaultParallelism`` tasks: the
+    spool writes one segment per core and ``binaryFile`` gives each its
+    own task. Task counts come from the status tracker."""
+    jobs = _group_jobs(spark.sparkContext, dump_attach_groups[0])
+    assert jobs, "the attach ran no Spark job"
+    # the first job is the decode: binaryFile scan → mapInPandas → the
+    # rollup's partial aggregate, up to its shuffle
+    assert jobs[0] == [spark.sparkContext.defaultParallelism], jobs
+
+
+def test_dump_attach_result_collect_runs_no_job(spark, dump_attach_groups):
+    """The collected rollup comes back as a local frame: collecting the
+    returned frame runs no Spark job."""
+    _, collect, rows = dump_attach_groups
+    assert rows
+    assert _group_jobs(spark.sparkContext, collect) == []

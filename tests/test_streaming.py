@@ -2133,6 +2133,45 @@ def test_spool_segments_carry_fde_and_decode_none_streams(tmpdir):
     assert total_rows == 200
 
 
+@pytest.mark.parametrize("checksum", ["CRC32", "NONE"])
+def test_spool_segments_per_core_limit_writes_at_most_n(tmpdir, checksum):
+    """``seg_limit = ceil(len(blob) / n)`` lands at most n segments (one
+    decode task per core, never a tiny extra one): the FDE carried into
+    each segment does not count toward the limit. Both checksum shapes
+    open with an FDE; a second FDE mid-blob is a chain-file hop."""
+    import os
+
+    from polardbx_cdc_spark import binlog_wire as W
+    from polardbx_cdc_spark.dump_server import spool_segments
+    from polardbx_cdc_spark.mysql_dump import _strip_frame_crc
+
+    td = W.TableDef("d", "t", [(W.TYPE_LONGLONG, None)])
+    frames = []
+    for txn in range(60):
+        if txn % 30 == 0:
+            frames.append(W.encode_fde())
+        frames += [
+            W.encode_query("", "BEGIN"),
+            W.encode_table_map(3, td),
+            W.encode_rows_event(W.WRITE_ROWS_EVENT, 3, td, [[txn]]),
+            W.encode_xid(txn),
+        ]
+    if checksum == "NONE":
+        frames = [_strip_frame_crc(f) for f in frames]
+    blob = b"".join(frames)
+    for n in range(1, 13):
+        spool = os.path.join(str(tmpdir), f"{checksum}_{n}")
+        got = spool_segments(blob, spool, -(-len(blob) // n))
+        assert 1 <= got <= n, (n, got)
+        rows = 0
+        for p in sorted(os.listdir(spool)):
+            with open(os.path.join(spool, p), "rb") as fh:
+                evs = W.decode_events(fh.read())
+            rows += sum(len(e["rows"]) for e in evs
+                        if e["type"] == W.WRITE_ROWS_EVENT)
+        assert rows == 60
+
+
 def test_emit_without_aqe_uses_source_width(spark, tmpdir):
     """With spark.sql.adaptive.enabled=false the sink still writes dense,
     ordered offsets from its ordered pass, and the exchange stays narrow
