@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import _group_jobs, _run_in_group
+from conftest import SF_SMOKE, _group_jobs, _run_in_group
 from polardbx_cdc_spark import binlog_wire as W
 from polardbx_cdc_spark import dump_server as D
 
@@ -809,9 +809,12 @@ def dump_attach_groups(spark):
     """One ``cdc_dump_attach_decode`` call at sf0.01 and one collect of
     the frame it returns, each in a job group of its own (the chain is
     rendered before either group opens)."""
+    import os
+
     from polardbx_cdc_spark import queries as Q
 
-    sf, sc = "/root/testdata/sf0.01", spark.sparkContext
+    sf = os.path.join(os.path.dirname(SF_SMOKE), "sf0.01")
+    sc = spark.sparkContext
     Q._cdc_wire_fixture(spark, sf)
     call, df = _run_in_group(sc, "dump attach call",
                              Q.cdc_dump_attach_decode, spark, sf)
