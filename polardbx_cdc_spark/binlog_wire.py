@@ -2513,6 +2513,10 @@ def events_to_binlog(df):
     )
 
 
+#: the schema of a decoded CDC frame (`binlog_to_events`)
+EVENTS_DDL = "db string, tbl string, action string, pk string, value double"
+
+
 def binlog_to_events(df):
     """Decode wire-byte blobs (a ``payload`` column of bare event streams:
     ``events_to_binlog`` output, dump spool segments) back into a CDC
@@ -2522,10 +2526,7 @@ def binlog_to_events(df):
     their kind as the action; ``value`` is column 1 of the surfaced image
     cast to double (an integer, decimal or numeric-text column 1 casts,
     any other raises)."""
-    return df.mapInPandas(
-        _decode_event_blobs,
-        "db string, tbl string, action string, pk string, value double",
-    )
+    return df.mapInPandas(_decode_event_blobs, EVENTS_DDL)
 
 
 def _decode_event_blobs(batches):

@@ -416,23 +416,24 @@ def consume_from_group(spark, host: str, port: int, group, member_id: str = "c0"
     if spool_dir:
         decoded = spool_decode(spark, bytes(blob), spool_dir)
         if decoded is None:
-            return local_frame(
-                spark, [],
-                "db string, tbl string, action string, pk string, value double",
-            )
+            return local_frame(spark, [], W.EVENTS_DDL)
         return decoded
     return W.binlog_to_events(
         local_frame(spark, [(bytes(blob),)], "payload binary"))
 
 
 def spool_decode(spark, blob: bytes, spool_dir: str):
-    """The distributed decode of a fetched dump blob: land it as segment
-    files under ``spool_dir`` (`spool_segments`), one per core, then
-    decode them with a ``binaryFile`` scan through
+    """The distributed decode of a blob the driver already fetched, for
+    ``consume_from_group(spool_dir=...)``, its only caller: land the blob
+    as segment files under ``spool_dir`` (`spool_segments`), one per
+    core, then decode them with a ``binaryFile`` scan through
     ``binlog_wire.binlog_to_events``, one task per segment. Returns the
     (db, tbl, action, pk, value) frame, or None when the blob held no
     events. Reads ``spool_segments`` from the module at call time, so a
-    wrapper installed on the module attribute sees every call.
+    wrapper installed on the module attribute sees every call. (The
+    MySQL-protocol dump queries fetch no blob in the driver: each of
+    their decode tasks dumps its own run of files,
+    `mysql_dump.dump_decode`.)
 
     Segments are ``ceil(len(blob) / defaultParallelism)`` bytes, capped
     at 16 MB: every core decodes one, and none decodes two. Smaller

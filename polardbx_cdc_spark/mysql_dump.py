@@ -30,11 +30,15 @@ replica connection streaming one binlog chain at the master's write
 rate; bytes are pumped frame-whole with no per-event decode (the GTID
 skip path reads 2 fixed header fields per event, nothing per column).
 The DATA PLANE — bulk encode of table data into wire bytes and bulk
-decode back into DataFrames — never passes through this socket: it
-runs distributed in `binlog_wire.events_to_binlog`/`binlog_to_events`
-(Arrow-batched mapInPandas on executors). Scaling replica fan-out =
-more handler threads (ThreadingTCPServer, one per replica); scaling
-data volume = Spark parallelism, untouched by this module.
+decode back into DataFrames — runs distributed in
+`binlog_wire.events_to_binlog`/`binlog_to_events` (Arrow-batched
+mapInPandas on executors). `dump_decode` is the one place the two
+meet: each of its decode tasks is a replica of its own, dumping one
+run of chain files by position and decoding it in place, so catch-up
+fans out over as many connections as cores and no byte passes through
+the driver. Scaling replica fan-out = more handler threads
+(ThreadingTCPServer, one per replica); scaling data volume = Spark
+parallelism.
 """
 
 from __future__ import annotations
@@ -156,14 +160,11 @@ def _gtid_subset(a: GtidSet, b: GtidSet) -> bool:
     return True
 
 
-def _write_packet(wfile, seq: int, payload: bytes, flush: bool = True) -> int:
-    """Write one (possibly split) protocol packet; returns next seq.
-
-    ``flush=False`` leaves the bytes in the BufferedWriter — the
-    catch-up dump loops batch a whole file per flush (a syscall per
-    event throttled the byte pump to ~7 MB/s on localhost); anything
-    latency-sensitive (live push, heartbeats, OK/ERR/EOF, result sets)
-    keeps the default immediate flush."""
+def _write_packet(wfile, seq: int, payload: bytes) -> int:
+    """Write one (possibly split) protocol packet and flush; returns next
+    seq. The catch-up dump loops frame a whole file with
+    `_event_packets` and write it once instead (a write per event
+    throttled the byte pump to ~7 MB/s on localhost)."""
     view = memoryview(payload)
     while True:
         chunk = view[:_MAX_PACKET]
@@ -172,8 +173,7 @@ def _write_packet(wfile, seq: int, payload: bytes, flush: bool = True) -> int:
         view = view[_MAX_PACKET:]
         if len(chunk) < _MAX_PACKET:
             break
-    if flush:
-        wfile.flush()
+    wfile.flush()
     return seq
 
 
@@ -197,6 +197,32 @@ def _strip_frame_crc(frame: bytes) -> bytes:
     out = bytearray(frame[: -W.CHECKSUM_LEN])
     struct.pack_into("<I", out, 9, len(out))
     return bytes(out)
+
+
+def _event_packets(parts: list, seq: int, frame, none: bool) -> int:
+    """Append one event packet to *parts*, the per-file output of both
+    catch-up dump loops: the packet header, then the OK byte and the
+    event frame (*none*: a binlog_checksum=NONE master's frame,
+    `_strip_frame_crc`). Header and OK byte share one small bytes object
+    and the frame joins zero-copy from the caller's memoryview. An event
+    of 16 MB or more splits exactly like `_write_packet`. Returns the
+    next seq."""
+    if none:
+        frame = _strip_frame_crc(frame)
+    pl = len(frame) + 1
+    if pl < _MAX_PACKET:
+        parts.append(pl.to_bytes(3, "little") + bytes((seq & 0xFF, 0)))
+        parts.append(frame)
+        return seq + 1
+    view = memoryview(b"\x00" + bytes(frame))
+    while True:
+        chunk = view[:_MAX_PACKET]
+        parts.append(len(chunk).to_bytes(3, "little") + bytes([seq & 0xFF]))
+        parts.append(bytes(chunk))
+        seq += 1
+        view = view[_MAX_PACKET:]
+        if len(chunk) < _MAX_PACKET:
+            return seq
 
 
 #: reassembled-packet cap = 1 GiB, the MAX_MAX_ALLOWED_PACKET a real
@@ -678,6 +704,7 @@ class _Handler(socketserver.StreamRequestHandler):
             )
             return
         seq = 1
+        none = srv.binlog_checksum == "NONE"
         cur, cur_off = fname, max(pos, 4)
         for name in files[files.index(fname):]:
             with open(os.path.join(srv.wire_dir, name), "rb") as fh:
@@ -685,48 +712,19 @@ class _Handler(socketserver.StreamRequestHandler):
             if buf[:4] != W.MAGIC:
                 continue
             start = max(pos, 4) if name == fname else 4
-            body = buf[4:]
+            body = memoryview(buf)[4:]
             off = start - 4
-            # per-FILE batched framing (r14): frame every event packet
-            # into a parts list and hit the socket ONCE per file — the
-            # old per-event _write_packet (memoryview loop + small
-            # buffered writes) was ~0.2s of the sf0.1 chain's 1.0s
-            # localhost fetch. Wire bytes identical: same packet
-            # boundaries, same seq progression, >16MB events still split.
-            parts: list[bytes] = []
-            mview = memoryview(body)
+            # per-FILE batched framing: every event packet goes into one
+            # parts list and the socket sees ONE write per file
+            parts: list = []
             while off + W.HEADER_LEN <= len(body):
                 elen = struct.unpack_from("<I", body, off + 9)[0]
                 if elen < W.HEADER_LEN + W.CHECKSUM_LEN or off + elen > len(body):
                     break
-                # event packet: OK byte + raw event bytes
-                if srv.binlog_checksum == "NONE":
-                    frame = _strip_frame_crc(body[off : off + elen])
-                else:
-                    frame = mview[off : off + elen]
-                pl = len(frame) + 1  # OK byte + frame (NONE strips 4)
-                if pl < _MAX_PACKET:
-                    # header + seq + OK byte in one small bytes object,
-                    # the frame itself joins zero-copy from the memoryview
-                    parts.append(pl.to_bytes(3, "little")
-                                 + bytes((seq & 0xFF, 0)))
-                    parts.append(frame)
-                    seq += 1
-                else:  # >16MB event: split exactly like _write_packet
-                    view = memoryview(b"\x00" + bytes(frame))
-                    while True:
-                        chunk = view[:_MAX_PACKET]
-                        parts.append(len(chunk).to_bytes(3, "little")
-                                     + bytes([seq & 0xFF]))
-                        parts.append(bytes(chunk))
-                        seq += 1
-                        view = view[_MAX_PACKET:]
-                        if len(chunk) < _MAX_PACKET:
-                            break
+                seq = _event_packets(parts, seq, body[off : off + elen], none)
                 off += elen
             if parts:
                 self.wfile.write(b"".join(parts))
-            self.wfile.flush()
             cur, cur_off = name, off + 4
         if block:
             seq = self._follow_live(srv, cur, cur_off, seq)
@@ -876,19 +874,21 @@ class _Handler(socketserver.StreamRequestHandler):
             ))
             return
         seq = 1
+        none = srv.binlog_checksum == "NONE"
         cur, cur_off = files[start_idx], 4
         for name in files[start_idx:]:
             with open(os.path.join(srv.wire_dir, name), "rb") as fh:
                 buf = fh.read()
             if buf[:4] != W.MAGIC:
                 continue
-            body, off, skip = buf[4:], 0, False
+            body, off, skip = memoryview(buf)[4:], 0, False
             in_group = False  # explicit BEGIN/XA START opened current group
             # GCN/SEQUENCE carriers precede their transaction's GTID
             # (render order: GCN, GTID, BEGIN, …, XID) — hold them until
             # the skip decision so they share their OWN txn's fate, not
             # the previous one's
-            pending: list[bytes] = []
+            pending: list = []
+            parts: list = []  # one write per file, as in _stream_dump
             while off + W.HEADER_LEN <= len(body):
                 elen = struct.unpack_from("<I", body, off + 9)[0]
                 if elen < W.HEADER_LEN + W.CHECKSUM_LEN or off + elen > len(body):
@@ -896,7 +896,7 @@ class _Handler(socketserver.StreamRequestHandler):
                 tc = body[off + 4]
                 frame = body[off : off + elen]
                 if tc in (W.GCN_EVENT, W.SEQUENCE_EVENT):
-                    pending.append(bytes(frame))
+                    pending.append(frame)
                     off += elen
                     continue
                 if tc == W.GTID_LOG_EVENT:
@@ -914,14 +914,8 @@ class _Handler(socketserver.StreamRequestHandler):
                     skip = False
                 if not skip:
                     for held in pending:
-                        if srv.binlog_checksum == "NONE":
-                            held = _strip_frame_crc(held)
-                        seq = _write_packet(self.wfile, seq, b"\x00" + held,
-                                            flush=False)
-                    out_frame = (_strip_frame_crc(frame)
-                                 if srv.binlog_checksum == "NONE" else frame)
-                    seq = _write_packet(self.wfile, seq, b"\x00" + out_frame,
-                                        flush=False)
+                        seq = _event_packets(parts, seq, held, none)
+                    seq = _event_packets(parts, seq, frame, none)
                 pending = []
                 if tc == W.XID_EVENT:
                     # transaction group ends at its XID: the skip decision
@@ -964,7 +958,8 @@ class _Handler(socketserver.StreamRequestHandler):
                     # its OWN GTID-framed group
                     skip = False
                 off += elen
-            self.wfile.flush()  # flush batched per FILE (see _stream_dump)
+            if parts:
+                self.wfile.write(b"".join(parts))
             cur, cur_off = name, off + 4
         if block:
             # auto-position replicas block by default too: after catch-up
@@ -1070,14 +1065,23 @@ class MySQLDumpServer:
 
 def binlog_dump_fetch(host: str, port: int, file_name: str = "",
                       pos: int = 4, server_id: int = 99,
-                      block: bool = False, timeout: float = 30.0) -> bytes:
+                      block: bool = False, timeout: float = 30.0,
+                      files: int | None = None) -> bytes:
     """Attach like a replica: handshake → COM_BINLOG_DUMP → collect the
     raw event bytes from the event packets until EOF. Returns bytes that
     feed straight into ``binlog_wire.decode_events`` — a relay log.
 
     ``block=True`` leaves BINLOG_DUMP_NON_BLOCK clear (a real replica's
     posture): the server keeps the stream open, pushing appended events
-    and HEARTBEAT filler until its live-idle limit ends the dump."""
+    and HEARTBEAT filler until its live-idle limit ends the dump.
+
+    ``files=k`` reads k chain files and hangs up: the fetch stops before
+    the event that would open file k+1, or at EOF. A file is opened by
+    its FDE (or, for a dump that starts mid-file, by the dump's first
+    event), so a file that ends without a ROTATE (a crashed master's)
+    cannot run the fetch into its neighbour's events. Artificial events
+    (flag ``LOG_EVENT_ARTIFICIAL_F``, a real master's fake ROTATE) open
+    nothing. The server sees the hang-up as a client that went away."""
     with socket.create_connection((host, port), timeout=timeout) as sock:
         rf = sock.makefile("rb")
         wf = sock.makefile("wb")
@@ -1102,7 +1106,7 @@ def binlog_dump_fetch(host: str, port: int, file_name: str = "",
             + file_name.encode()
         )
         _write_packet(wf, 0, dump)
-        return _collect_event_packets(rf)
+        return _collect_event_packets(rf, files)
 
 
 def binlog_dump_gtid_fetch(host: str, port: int, executed: GtidSet,
@@ -1211,7 +1215,12 @@ def query(host: str, port: int, sql: str
         return names, rows
 
 
-def _collect_event_packets(rf) -> bytes:
+#: LOG_EVENT_ARTIFICIAL_F: the event header flag of events a master
+#: makes up for the replica (the fake ROTATE that opens a dump)
+_ARTIFICIAL_F = 0x20
+
+
+def _collect_event_packets(rf, files: int | None = None) -> bytes:
     # NOTE (r14): a chunked read1+offset-arithmetic rewrite of this loop
     # was tried and MEASURED SLOWER (interleaved A/B: 0.80-0.90s old vs
     # 0.92-1.02s chunked for the 190k-packet sf0.1 fetch) — the two
@@ -1220,6 +1229,7 @@ def _collect_event_packets(rf) -> bytes:
     # 1.0s was the server's serve_forever poll_interval, fixed in
     # MySQLDumpServer.start.
     out = bytearray()
+    opened = 0  # chain files begun (see binlog_dump_fetch's ``files``)
     while True:
         pkt = _read_packet(rf)
         if pkt is None:
@@ -1230,5 +1240,66 @@ def _collect_event_packets(rf) -> bytes:
         if payload[:1] == b"\xff":
             raise ValueError(f"server error: {payload[9:].decode(errors='replace')}")
         assert payload[:1] == b"\x00"
+        # payload = OK byte + event: type at 1+4, flags' low byte at 1+17
+        if (files is not None and len(payload) > W.HEADER_LEN
+                and not payload[18] & _ARTIFICIAL_F
+                and (opened == 0 or payload[5] == W.FORMAT_DESCRIPTION_EVENT)):
+            if opened == files:
+                break
+            opened += 1
         out += payload[1:]
     return bytes(out)
+
+
+def plan_runs(logs: list[tuple[str, int]], n: int) -> list[list[str]]:
+    """Cut a binlog chain — ``(Log_name, File_size)`` rows of SHOW BINARY
+    LOGS, in chain order — into at most *n* contiguous runs of whole
+    files, balanced by size: run *i* closes once the chain's bytes so far
+    reach *i* shares of ``ceil(total / n)``, and once the files left fit
+    one per remaining run, each gets a run of its own. So a chain of at
+    most *n* files gets one run per file."""
+    if not logs:
+        return []
+    share = -(-sum(size for _, size in logs) // n)
+    runs: list[list[str]] = [[]]
+    cum = 0
+    for i, (name, size) in enumerate(logs):
+        runs[-1].append(name)
+        cum += size
+        left = len(logs) - i - 1
+        if left and (cum >= len(runs) * share or left <= n - len(runs)):
+            runs.append([])
+    return runs
+
+
+def dump_decode(spark, host: str, port: int):
+    """Parallel position-based attach: decode a dump server's whole chain
+    in one Spark job, with no driver-side fetch and no spool. The driver
+    lists the chain (SHOW BINARY LOGS) and cuts it into at most
+    ``defaultParallelism`` runs of files (`plan_runs`); task *i* of
+    ``spark.range(runs).mapInPandas`` opens its own COM_BINLOG_DUMP
+    (NON_BLOCK) at (first file of run *i*, 4), reads the run's files
+    (`binlog_dump_fetch` ``files=``) and decodes them in place through
+    `binlog_wire.binlog_to_events`' projection. Every run opens with its
+    own file's FDE, so it decodes standalone, a binlog_checksum=NONE
+    chain included. Executors must reach ``host:port``, and the server
+    must stay up until the frame has run. Returns the (db, tbl, action,
+    pk, value) frame, or None when the server lists no files."""
+    _, logs = query(host, port, "SHOW BINARY LOGS")
+    runs = plan_runs([(name, int(size)) for name, size in logs],
+                     spark.sparkContext.defaultParallelism)
+    if not runs:
+        return None
+
+    def fetch_decode(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            for i in pdf["id"]:
+                run = runs[i]
+                blob = binlog_dump_fetch(host, port, run[0], 4, files=len(run))
+                yield from W._decode_event_blobs(
+                    [pd.DataFrame({"payload": [blob]})])
+
+    return spark.range(0, len(runs), 1, len(runs)).mapInPandas(
+        fetch_decode, W.EVENTS_DDL)

@@ -808,34 +808,126 @@ def test_dump_server_fuzz_1000_sessions_never_crash_handler(fuzz_served):
 def dump_attach_groups(spark):
     """One ``cdc_dump_attach_decode`` call at sf0.01 and one collect of
     the frame it returns, each in a job group of its own (the chain is
-    rendered before either group opens)."""
+    rendered before either group opens). The call also records the
+    decode frame `mysql_dump.dump_decode` hands it, the number of chain
+    files it served, and every ``tempfile.mkdtemp`` and
+    ``dump_server.spool_segments`` call it made."""
     import os
+    import tempfile
 
+    from polardbx_cdc_spark import mysql_dump as MD
     from polardbx_cdc_spark import queries as Q
 
     sf = os.path.join(os.path.dirname(SF_SMOKE), "sf0.01")
     sc = spark.sparkContext
-    Q._cdc_wire_fixture(spark, sf)
-    call, df = _run_in_group(sc, "dump attach call",
-                             Q.cdc_dump_attach_decode, spark, sf)
+    wire = Q._cdc_wire_fixture(spark, sf)["wire"]
+    seen = {"decoded": [], "mkdtemp": [], "spool": []}
+    decode, mkdtemp = MD.dump_decode, tempfile.mkdtemp
+
+    def recording_decode(*a, **kw):
+        df = decode(*a, **kw)
+        seen["decoded"].append(df)
+        return df
+
+    def recording_mkdtemp(*a, **kw):
+        seen["mkdtemp"].append((a, kw))
+        return mkdtemp(*a, **kw)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(MD, "dump_decode", recording_decode)
+        mp.setattr(tempfile, "mkdtemp", recording_mkdtemp)
+        mp.setattr(D, "spool_segments",
+                   lambda *a, **kw: seen["spool"].append(a) or 0)
+        call, df = _run_in_group(sc, "dump attach call",
+                                 Q.cdc_dump_attach_decode, spark, sf)
     collect, rows = _run_in_group(sc, "dump attach collect", df.collect)
-    return call, collect, rows
+    n_files = len([f for f in os.listdir(wire) if f.startswith("binlog.")])
+    return call, collect, rows, seen, n_files
 
 
-def test_dump_attach_decodes_one_segment_per_core(spark, dump_attach_groups):
-    """The attach's decode stage runs ``defaultParallelism`` tasks: the
-    spool writes one segment per core and ``binaryFile`` gives each its
-    own task. Task counts come from the status tracker."""
-    jobs = _group_jobs(spark.sparkContext, dump_attach_groups[0])
-    assert jobs, "the attach ran no Spark job"
-    # the first job is the decode: binaryFile scan → mapInPandas → the
-    # rollup's partial aggregate, up to its shuffle
-    assert jobs[0] == [spark.sparkContext.defaultParallelism], jobs
+def test_dump_attach_runs_one_task_per_run_of_files(spark, dump_attach_groups):
+    """The attach is one decode job whose first stage runs
+    ``min(defaultParallelism, files)`` tasks, one per run of chain files,
+    each dumping its own run: its plan scans no file (no ``binaryFile``
+    spool scan), no spool segment is written and no spool directory is
+    made. Task counts come from the status tracker."""
+    call, _, rows, seen, n_files = dump_attach_groups
+    sc = spark.sparkContext
+    jobs = _group_jobs(sc, call)
+    assert rows and jobs, "the attach ran no Spark job"
+    # the first job is the decode: range → mapInPandas (dump + decode)
+    # → the rollup's partial aggregate, up to its shuffle
+    assert jobs[0][0] == min(sc.defaultParallelism, n_files), jobs
+    assert len(seen["decoded"]) == 1
+    plan = seen["decoded"][0]._jdf.queryExecution().executedPlan().toString()
+    assert "Range" in plan and "MapInPandas" in plan, plan
+    assert "FileScan" not in plan and "binaryFile" not in plan, plan
+    assert seen["spool"] == [] and seen["mkdtemp"] == [], seen
 
 
 def test_dump_attach_result_collect_runs_no_job(spark, dump_attach_groups):
     """The collected rollup comes back as a local frame: collecting the
     returned frame runs no Spark job."""
-    _, collect, rows = dump_attach_groups
+    _, collect, rows, _, _ = dump_attach_groups
     assert rows
     assert _group_jobs(spark.sparkContext, collect) == []
+
+
+@pytest.mark.parametrize("name", [
+    "cdc_wire_stream_tail", "cdc_wire_stream_x_tail",
+    "cdc_ivm_join_view_stream", "orders_wire_ddl_evolution",
+    "orders_wire_typed_stream_evo",
+])
+def test_collected_result_frame_runs_no_job(spark, sf_dir, name):
+    """Queries that collect a small result and hand it back build it
+    with `session.local_frame`: collecting the returned frame runs no
+    Spark job."""
+    from polardbx_cdc_spark import queries as Q
+
+    sc = spark.sparkContext
+    df = getattr(Q, name)(spark, sf_dir)
+    collect, rows = _run_in_group(sc, f"{name} collect", df.collect)
+    assert rows
+    assert _group_jobs(sc, collect) == []
+
+
+def test_dump_decode_rows_equal_one_connection_decode(spark, tmp_path):
+    """`mysql_dump.dump_decode` over a CRC32 and a NONE master: the union
+    of the per-run decoded rows equals `binlog_to_events` over the
+    single-connection fetch of the whole chain, as a multiset, and the
+    early hang-ups leave no handler error."""
+    import collections
+    import os
+    import time
+
+    from polardbx_cdc_spark import mysql_dump as MD
+    from polardbx_cdc_spark.session import local_frame
+
+    wire = str(tmp_path / "wire")
+    os.makedirs(wire)
+    tds = [W.TableDef("d", f"t{k}", [(W.TYPE_LONGLONG, None),
+                                     (W.TYPE_DOUBLE, 8)]) for k in range(2)]
+    names = [f"binlog.{i:06d}" for i in range(1, 8)]
+    for i, name in enumerate(names):
+        evs = []
+        for k, td in enumerate(tds):
+            rows = [[100 * i + 10 * k + j, i + j / 4] for j in range(i + 2)]
+            evs.append(W.encode_table_map(5 + k, td) + W.encode_rows_event(
+                W.WRITE_ROWS_EVENT, 5 + k, td, rows))
+            evs.append(W.encode_table_map(5 + k, td) + W.encode_rows_event(
+                W.DELETE_ROWS_EVENT, 5 + k, td, rows[:1]))
+        W.write_binlog_file(os.path.join(wire, name), evs,
+                            next_file=None if i == 3 or i == 6
+                            else names[i + 1])
+    for checksum in ("CRC32", "NONE"):
+        with MD.MySQLDumpServer(wire, binlog_checksum=checksum) as srv:
+            host, port = srv.address
+            par = MD.dump_decode(spark, host, port).collect()
+            blob = MD.binlog_dump_fetch(host, port, names[0], 4)
+            one = W.binlog_to_events(
+                local_frame(spark, [(blob,)], "payload binary")).collect()
+            time.sleep(0.3)
+            assert srv.handler_errors == []
+        assert len(par) == len(one) == sum(2 * (i + 3) for i in range(7))
+        assert (collections.Counter(map(tuple, par))
+                == collections.Counter(map(tuple, one))), checksum

@@ -1672,3 +1672,122 @@ def test_vendored_client_16mb_event_none_checksum_across_rotation(tmp_path):
            for r in e["rows"]]
     assert got == [[1, big], [2, big[::-1]]]
     assert any(e["type"] == W.XID_EVENT and e["xid"] == 5 for e in evs)
+
+
+@pytest.fixture(params=["CRC32", "NONE"])
+def five_file_chain(tmp_path, request):
+    """A five-file chain served by a CRC32 or a NONE master; the third
+    file ends without a ROTATE (a crashed master's)."""
+    wire = str(tmp_path / "wire")
+    os.makedirs(wire)
+    td = W.TableDef("d", "t", [(W.TYPE_LONGLONG, None), (W.TYPE_VARCHAR, 256)])
+    names = [f"binlog.{i:06d}" for i in range(1, 6)]
+    for i, name in enumerate(names):
+        rows = [[10 * i + j, f"v{i}.{j}"] for j in range(i + 1)]
+        W.write_binlog_file(
+            os.path.join(wire, name),
+            [W.encode_table_map(3, td)
+             + W.encode_rows_event(W.WRITE_ROWS_EVENT, 3, td, rows),
+             W.encode_xid(100 + i)],
+            next_file=None if i in (2, 4) else names[i + 1],
+        )
+    with M.MySQLDumpServer(wire, binlog_checksum=request.param) as srv:
+        host, port = srv.address
+        yield {"host": host, "port": port, "srv": srv, "names": names}
+
+
+def test_range_fetches_concatenate_to_full_dump(five_file_chain):
+    """``binlog_dump_fetch(files=k)`` reads k chain files and stops at the
+    next file's FDE (or EOF), so runs of one file, runs of several, a run
+    across the ROTATE-less middle file and a run that asks past the
+    chain's end all concatenate byte for byte to the full dump; the
+    server sees each early hang-up as a clean close."""
+    import time
+
+    c = five_file_chain
+    host, port, names = c["host"], c["port"], c["names"]
+    full = M.binlog_dump_fetch(host, port, names[0], 4)
+    cuts = [
+        [[n] for n in names],               # one file per run
+        [names[:2], names[2:4], names[4:]],  # several files per run
+        [names[:3], names[3:]],              # the ROTATE-less file closes a run
+        [names[:1], names[1:4], names[4:]],  # ... and sits inside one
+        [names],                             # one run, the whole chain
+    ]
+    for runs in cuts:
+        got = [M.binlog_dump_fetch(host, port, r[0], 4, files=len(r))
+               for r in runs]
+        assert b"".join(got) == full, [len(g) for g in got]
+        for g in got:  # every run opens with its own file's FDE
+            assert g[4] == W.FORMAT_DESCRIPTION_EVENT
+    # a run that starts mid-file: the dump's first event opens file 1
+    second = M.binlog_dump_fetch(host, port, names[1], 4, files=1)
+    fde_len = struct.unpack_from("<I", second, 9)[0]
+    assert M.binlog_dump_fetch(host, port, names[1], 4 + fde_len,
+                               files=1) == second[fde_len:]
+    # a run that asks for more files than the chain has ends at EOF
+    tail = M.binlog_dump_fetch(host, port, names[3], 4, files=9)
+    assert full.endswith(tail) and tail[4] == W.FORMAT_DESCRIPTION_EVENT
+    assert len(W.decode_events(tail)) == len(
+        W.decode_events(M.binlog_dump_fetch(host, port, names[3], 4)))
+    rows = [r for e in W.decode_events(
+                M.binlog_dump_fetch(host, port, names[1], 4, files=2))
+            if e["type"] == W.WRITE_ROWS_EVENT for r in e["rows"]]
+    assert rows == [[10, "v1.0"], [11, "v1.1"],
+                    [20, "v2.0"], [21, "v2.1"], [22, "v2.2"]]
+    time.sleep(0.3)
+    assert c["srv"].handler_errors == []
+
+
+def test_range_fetch_skips_artificial_events_when_counting_files():
+    """A real master opens a dump with an artificial ROTATE (flag
+    LOG_EVENT_ARTIFICIAL_F): it opens no file, so ``files=1`` still
+    reads the whole first file and stops at the second file's FDE."""
+    import io
+
+    def artificial(ev: bytes) -> bytes:
+        out = bytearray(ev)
+        out[17] |= M._ARTIFICIAL_F
+        struct.pack_into("<I", out, len(out) - W.CHECKSUM_LEN,
+                         zlib.crc32(bytes(out[: -W.CHECKSUM_LEN])) & 0xFFFFFFFF)
+        return bytes(out)
+
+    events = [artificial(W.encode_rotate("binlog.000001")), W.encode_fde(),
+              W.encode_xid(1), W.encode_rotate("binlog.000002"),
+              W.encode_fde(), W.encode_xid(2)]
+    stream = io.BytesIO()
+    seq = 1
+    for ev in events:
+        seq = M._write_packet(stream, seq, b"\x00" + ev)
+    M._write_packet(stream, seq, b"\xfe\x00\x00\x02\x00")
+    for files, n_events in ((1, 4), (2, 6), (None, 6)):
+        stream.seek(0)
+        assert M._collect_event_packets(stream, files) == b"".join(
+            events[:n_events])
+
+
+def test_plan_runs_balances_contiguous_runs_by_size():
+    """`plan_runs`: at most n contiguous runs that cover the chain in
+    order; equal files split evenly, a chain of at most n files gets one
+    run per file, and a skewed chain closes runs by size."""
+    eq = [(f"f{i}", 100) for i in range(32)]
+    runs = M.plan_runs(eq, 4)
+    assert [len(r) for r in runs] == [8, 8, 8, 8]
+    assert sum(runs, []) == [n for n, _ in eq]
+    assert M.plan_runs(eq[:3], 4) == [["f0"], ["f1"], ["f2"]]
+    assert M.plan_runs(eq[:4], 4) == [["f0"], ["f1"], ["f2"], ["f3"]]
+    assert M.plan_runs([], 4) == []
+    # small files ahead of a big one still get runs of their own
+    assert M.plan_runs([("a", 10), ("b", 10), ("c", 100)], 4) == [
+        ["a"], ["b"], ["c"]]
+    assert M.plan_runs([(c, 1) for c in "abcde"] + [("f", 100)], 4) == [
+        ["a", "b", "c"], ["d"], ["e"], ["f"]]
+    skew = [("a", 1000), ("b", 10), ("c", 10), ("d", 10), ("e", 10),
+            ("f", 10), ("g", 10)]
+    runs = M.plan_runs(skew, 4)
+    assert runs[0] == ["a"] and len(runs) <= 4
+    assert sum(runs, []) == [n for n, _ in skew]
+    for n in (1, 2, 3, 5, 7):
+        runs = M.plan_runs(eq[:13], n)
+        assert len(runs) == min(n, 13) and all(runs)
+        assert sum(runs, []) == [name for name, _ in eq[:13]]
